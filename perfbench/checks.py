@@ -203,7 +203,10 @@ def check_serve(truth, params, res, v):
     latest = truth["latest"]
     cols = ["user_id", "ts", "ctr", "clicks", "segment"]
     hits = present = 0
-    for r in _lines(os.path.join(params["out_dir"], "responses.jsonl")):
+    responses = _lines(os.path.join(params["out_dir"], "responses.jsonl"))
+    if len(responses) != len(res["ops"]):
+        v.bad("serve: %d response records for %d ops" % (len(responses), len(res["ops"])))
+    for r in responses:
         want = sorted(tuple(latest[k][c] for c in cols) for k in r["keys"] if k in latest)
         got = sorted(tuple(x[c] for c in cols) for x in r["rows"])
         present += len(want)
@@ -231,7 +234,10 @@ def check_ann(truth, params, res, v):
         order = np.lexsort((nid, -cos[j]))[:k]
         exact[truth["qid0"] + j] = set(order.tolist())
     recalls = []
-    for r in _lines(os.path.join(params["out_dir"], "topk.jsonl")):
+    topk = _lines(os.path.join(params["out_dir"], "topk.jsonl"))
+    if len(topk) != len(res["ops"]):
+        v.bad("ann: %d top-k records for %d ops" % (len(topk), len(res["ops"])))
+    for r in topk:
         by_q = collections.defaultdict(list)
         for qid, n, rank in r["rows"]:
             by_q[qid].append((rank, n))

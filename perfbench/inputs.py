@@ -57,7 +57,7 @@ SIZES = {
     "stream_ingest": dict(users=4000, items=3000, silver_rows=40000,
                           batch=1000, batches=24, probe_keys=32),
     "online_serve": dict(ANN, users=2000, keys=16, requests=512, absent=0.125,
-                         round_size=8, warmup_ops=6, pq_m=0),
+                         round_size=8, warmup_ops=6),
     "ann_index": dict(ANN, query_batch=32, warmup_ops=3),
 }
 # the int64 request set: fixed keys, present in every seed's table

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 
 import graft.llm.{IvfIndex, Pq, Similarity}
 
-/** Build at setup: Pq.fit + Pq.encode (when pq_m > 0) + IvfIndex.fit +
+/** Build at setup: Pq.fit + Pq.encode + IvfIndex.fit +
   * buildInverted over the seeded corpus. One op = one fixed-size query batch through
   * Similarity.ivfTopKPersisted. Traced runs also time the brute-force
   * Similarity.cosineTopK over the same batch (the break-even baseline). */
@@ -19,9 +19,6 @@ final class AnnIndex(ctx: Ctx) extends Workload {
   private val k = p.int("k")
   private val nprobe = p.int("nprobe")
   private val seed = p.long("index_seed")
-  /** PQ sub-spaces; 0 builds the IVF index alone (its probes never read
-    * the PQ codes). */
-  private val pqM = p.int("pq_m")
   override val warmupOps: Int = p.int("warmup_ops")
   private lazy val corpus = spark.read.parquet(s"${ctx.in}/corpus")
   private var index: IvfIndex.Model = _
@@ -34,14 +31,12 @@ final class AnnIndex(ctx: Ctx) extends Workload {
     qschema = q.schema
     batches = q.orderBy("qid").collect().toSeq
       .grouped(p.int("query_batch")).toIndexedSeq
-    if (pqM > 0) {
-      val pq = trace.span("llm.pq_fit_ms") {
-        Pq.fit(corpus, "nvec", m = pqM, ksub = p.int("pq_ksub"), seed = seed,
-          maxIter = p.int("pq_max_iter"))
-      }
-      trace.span("llm.pq_encode_ms") {
-        Pq.encode(corpus, "nvec", pq).drop("nvec").write.parquet(codes)
-      }
+    val pq = trace.span("llm.pq_fit_ms") {
+      Pq.fit(corpus, "nvec", m = p.int("pq_m"), ksub = p.int("pq_ksub"),
+        seed = seed, maxIter = p.int("pq_max_iter"))
+    }
+    trace.span("llm.pq_encode_ms") {
+      Pq.encode(corpus, "nvec", pq).drop("nvec").write.parquet(codes)
     }
     index = trace.span("llm.ivf_fit_ms") {
       IvfIndex.fit(corpus, nlist = p.int("nlist"), seed = seed)
@@ -75,5 +70,5 @@ final class AnnIndex(ctx: Ctx) extends Workload {
     ctx.dump("topk.jsonl", m)
   }
 
-  def outputDirs: Seq[String] = if (pqM > 0) Seq(cells, codes) else Seq(cells)
+  def outputDirs: Seq[String] = Seq(cells, codes)
 }

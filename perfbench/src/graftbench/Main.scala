@@ -124,9 +124,11 @@ object Main {
           sums.foreach { case (k, v) => layers.put(k, Double.box(v)) }
           layers.put("spark.outside_jobs_ms",
             Double.box(Trace.outsideJobsMs(wall0, wall1, jobs)))
+          // the side calls' own spans only: their listener counts describe
+          // the side calls, not op i, and must not replace op i's spark.*
           w.traceOp(i)
-          trace.take(spark).
-            _1.foreach { case (k, v) => layers.put(k, Double.box(v)) }
+          trace.take(spark)._1.filter { case (k, _) => !Trace.listenerKey(k) }
+            .foreach { case (k, v) => layers.put(k, Double.box(v)) }
           rec.put("layers", layers)
         }
         w.afterOp(i)

@@ -95,6 +95,10 @@ final class Trace(val on: Boolean) {
 }
 
 object Trace {
+  /** Names the listeners fill, as opposed to the benchmark's own spans. */
+  def listenerKey(name: String): Boolean =
+    name.startsWith("spark.") || name.startsWith("streaming.")
+
   /** Milliseconds of [t0, t1] that no Spark job covered. */
   def outsideJobsMs(t0: Long, t1: Long, jobs: Seq[(Long, Long)]): Double = {
     var covered = 0L
