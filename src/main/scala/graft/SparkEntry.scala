@@ -5420,7 +5420,8 @@ object SparkEntry {
     // q204's MERGE run through the REAL streaming machinery: the op
     // stream lands batch by batch in foreachBatch, each batch
     // compacts to last-op-per-key and merges into a versioned
-    // OnlineTable op log (latest-per-key of a union — idempotent
+    // OnlineTable op log through its read-modify-write publishMerge
+    // (latest-per-key of a union — idempotent
     // under batch retries, correct under ANY batch split because the
     // stored row keeps its (ts, tie) order key), and the final
     // snapshot applies the SAME full-outer merge as q204. The oracle
@@ -5449,13 +5450,12 @@ object SparkEntry {
           val sp = batch.sparkSession
           val latestBatch = PointInTime.latestPerKey(batch, Seq("key"),
             "ts_us", "event_id")
-          val merged = OnlineTable.read(sp, opsPath) match {
+          OnlineTable.publishMerge(sp, opsPath, {
             case Some(ex) => PointInTime.latestPerKey(
               ex.unionByName(latestBatch), Seq("key"), "ts_us",
               "event_id")
             case None => latestBatch
-          }
-          OnlineTable.publish(merged, opsPath)
+          })
         }
         .option("checkpointLocation", s"$root/ckpt")
         .trigger(Trigger.AvailableNow()).start()

@@ -99,16 +99,9 @@ object SilverToGold {
 object StreamSilverToGold {
   /** The reference's stream transform (:78-152): raw-id copies, model
     * indexing, int cast battery, load timestamps. */
-  def transform(parsed: DataFrame, model: Categorify.Model): DataFrame = {
-    val kept = parsed.select(Aliccp.goldKeep.map(col): _*)
-    val withRaw = Aliccp.goldRawCopy.foldLeft(kept)(
-      (df, c) => df.withColumn(s"${c}_raw", col(c)))
-    val indexed = model.transform(withRaw)
-    Aliccp.goldIndexCols.foldLeft(indexed)(
-      (df, c) => df.withColumn(c, col(c).cast("int")))
-      .withColumn("created", current_timestamp())
-      .withColumn("datetime", current_timestamp())
-  }
+  def transform(parsed: DataFrame, model: Categorify.Model): DataFrame =
+    SilverGold.applyModel(parsed.select(Aliccp.goldKeep.map(col): _*), model,
+      Aliccp.goldRawCopy, Aliccp.goldIndexCols)
 
   def main(args: Array[String]): Unit = {
     if (args.length != 5) sys.error("usage: graft.jobs.StreamSilverToGold " +

@@ -27,19 +27,25 @@ object SilverGold {
   def toGold(silver: DataFrame, keep: Seq[String], rawCopy: Seq[String],
              index: Seq[String], eventTime: String = null): Gold = {
     val selected = silver.select(keep.map(col): _*).na.drop()
-    val withRaw = rawCopy.foldLeft(selected)(
+    val model = Categorify.fit(selected, index)
+    Gold(applyModel(selected, model, rawCopy, index, eventTime), model)
+  }
+
+  /** The gold steps after the fit, shared by the batch job and the
+    * stream that indexes with the batch-fitted model: raw-id copies,
+    * indexing, the int cast battery and load timestamps (created = wall
+    * clock at load; datetime = event time when present, else load time). */
+  def applyModel(kept: DataFrame, model: Categorify.Model,
+                 rawCopy: Seq[String], index: Seq[String],
+                 eventTime: String = null): DataFrame = {
+    val withRaw = rawCopy.foldLeft(kept)(
       (df, c) => df.withColumn(s"${c}_raw", col(c)))
-    val model = Categorify.fit(withRaw, index)
-    val indexed = model.transform(withRaw)
-    // cast battery + load timestamps (created = wall clock at load;
-    // datetime = event time when present, else load time)
-    val casted = index.foldLeft(indexed)(
+    index.foldLeft(model.transform(withRaw))(
       (df, c) => df.withColumn(c, col(c).cast("int")))
       .withColumn("created", current_timestamp())
       .withColumn("datetime",
         if (eventTime == null) current_timestamp()
         else to_timestamp(col(eventTime)))
-    Gold(casted, model)
   }
 
   /** click==1 subset — the reference's `alicppretrieval` table (:171). */

@@ -29,8 +29,8 @@ object FeatureStore {
 
   /** Offline -> online materialization: collapse history to the newest row
     * per entity key (by event time, tie-broken deterministically) and
-    * publish a compact keyed snapshot through [[OnlineTable]] (atomic
-    * pointer flip — readers never see a half-written table). Streaming
+    * publish a compact keyed snapshot through [[OnlineTable]] (one
+    * commit-log entry — readers never see a half-written table). Streaming
     * ingest reaches the same layout via Streams.upsertOnline. */
   def materializeOnline(view: FeatureView, source: DataFrame,
                         path: String, tieBreak: String = null): Unit = {

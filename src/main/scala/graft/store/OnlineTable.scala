@@ -1,7 +1,9 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, xxhash64}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Versioned online-table layout with an optimistic-concurrency commit
   * log — the object-store-safe replacement for directory-rename swaps
@@ -11,38 +13,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Layout under `root`:
   * {{{
-  *   root/_commits/c-<seq>   <- the POINTER LOG: one file per commit,
-  *                              created EXCLUSIVELY, naming the version
-  *   root/_CURRENT           <- cache of the log head (legacy readers)
+  *   root/_commits/c-<seq>   <- the COMMIT LOG: one file per commit,
+  *                              created EXCLUSIVELY, naming the version;
+  *                              the highest seq is the live version
   *   root/v-<version>/       <- immutable, fully-written parquet snapshots
+  *   root/m-<version>        <- bucketed snapshots: a manifest naming...
+  *   root/g-<generation>/    <- ...immutable bucket-generation dirs
   * }}}
   *
-  * A publish writes a NEW version directory to completion, then commits
-  * by creating `_commits/c-<head+1>` with `overwrite=false` — an
-  * EXCLUSIVE create (atomic on posix and HDFS; on an object store the
-  * equivalent is a conditional PUT, e.g. S3 If-None-Match). Two
-  * concurrent publishers that both read head N both target `c-<N+1>`;
-  * the filesystem admits exactly ONE — the loser observes the collision
-  * and either retries against the new head ([[publish]]) or surfaces
-  * [[ConcurrentPublishException]] ([[publishIf]], the compare-and-set
-  * form: commit only if the live version still equals what the caller
-  * read). This is the multi-writer optimistic-concurrency core of the
-  * transactional table formats (Delta's `_delta_log/<n>.json` exclusive
-  * create is the same protocol).
+  * A publish writes a NEW version to completion, then commits by
+  * creating `_commits/c-<head+1>` with `overwrite=false` — an EXCLUSIVE
+  * create (atomic on posix and HDFS; on an object store the equivalent
+  * is a conditional PUT, e.g. S3 If-None-Match). Two concurrent
+  * publishers that both read head N both target `c-<N+1>`; the
+  * filesystem admits exactly ONE — the loser observes the collision and
+  * either retries against the new head ([[publish]] and every
+  * read-modify-write publish) or surfaces [[ConcurrentPublishException]]
+  * ([[publishIf]], the compare-and-set form: commit only if the live
+  * version still equals what the caller read). This is the multi-writer
+  * optimistic-concurrency core of the transactional table formats
+  * (Delta's `_delta_log/<n>.json` exclusive create is the same protocol).
   *
-  * Readers resolve the log head then scan an immutable directory, so
-  * they can never observe a half-written table; a reader holding the
-  * previous version keeps working because the previous snapshot is
-  * retained for one publish cycle (older ones are garbage-collected).
-  * A writer crash before the commit leaves only an unreferenced version
-  * dir, collected by the first successful publish after it ages past
-  * [[OrphanGraceMs]]; a crash AFTER the
-  * commit but before the `_CURRENT` cache flip is healed because the
-  * log, not the cache, is authoritative.
+  * Readers resolve the log head then scan immutable files, so they can
+  * never observe a half-written table; a reader holding the previous
+  * version keeps working because the previous snapshot is retained for
+  * one publish cycle (older ones are garbage-collected). A writer crash
+  * before the commit leaves only an unreferenced version, collected by
+  * the first successful publish after it ages past [[OrphanGraceMs]];
+  * after the commit a publish only collects garbage, so a crash there
+  * leaves a consistent table.
   */
 object OnlineTable {
 
-  private val CurrentFile = "_CURRENT"
   private val CommitDir = "_commits"
   private val PublishRetries = 100
 
@@ -110,13 +112,9 @@ object OnlineTable {
       .sortBy(_._1)
   }
 
-  /** Log head (seq, version): the commit log if present, else the
-    * legacy pointer file at synthetic seq 0. */
+  /** Log head (seq, version), if the table has ever been published. */
   private def head(fs: FileSystem, rootPath: Path): Option[(Long, String)] =
-    logEntries(fs, rootPath).lastOption.orElse {
-      val ptr = new Path(rootPath, CurrentFile)
-      if (fs.exists(ptr)) Some((0L, readSmall(fs, ptr))) else None
-    }
+    logEntries(fs, rootPath).lastOption
 
   /** One exclusive commit attempt at `seq`; false on collision.
     *
@@ -155,6 +153,54 @@ object OnlineTable {
     }
   }
 
+  /** Commit `version` at the seq after `h0` and, if it won, collect
+    * garbage; false if another publisher took that seq. */
+  private def commitAfter(fs: FileSystem, rootPath: Path,
+                          h0: Option[(Long, String)], version: String,
+                          keepVersions: Int): Boolean =
+    tryCommit(fs, rootPath, h0.fold(1L)(_._1 + 1L), version) && {
+      collectGarbage(fs, rootPath, keepVersions)
+      true
+    }
+
+  /** The compare-and-swap loop behind every retrying publish: read the
+    * head, derive the version to commit over it (None: nothing to
+    * commit), commit it at head+1. A lost race re-derives from the
+    * winner's head. So does a derive that fails on files vanishing
+    * mid-read: derives read the previous snapshot LAZILY, and a
+    * concurrent publisher's GC may evict the head this attempt resolved
+    * and collect what it referenced. Each retry means another writer
+    * committed, so the loop starves only under pathological contention,
+    * and then it fails loudly with the last conflict. */
+  private def casLoop(fs: FileSystem, rootPath: Path, keepVersions: Int)(
+      derive: Option[(Long, String)] => Option[String]): Unit = {
+    require(keepVersions >= 2, "keepVersions must be >= 2")
+    var last: Throwable = null
+    var attempt = 0
+    while (attempt < PublishRetries) {
+      attempt += 1
+      val h0 = head(fs, rootPath)
+      val derived =
+        try Right(derive(h0))
+        catch { case e: Throwable if isMissingFiles(e) => Left(e) }
+      derived match {
+        case Left(e) => last = e
+        case Right(None) => return
+        case Right(Some(version)) =>
+          if (commitAfter(fs, rootPath, h0, version, keepVersions)) return
+          // lost the race: the written version stays an orphan for GC
+          last = ConcurrentPublishException(h0.map(_._2),
+            head(fs, rootPath).map(_._2))
+      }
+    }
+    throw last
+  }
+
+  /** A fresh, time-ordered file name under the table root. */
+  private def freshName(prefix: String,
+                        ts: Long = System.currentTimeMillis()): String =
+    f"$prefix$ts%013d-${java.util.UUID.randomUUID().toString.take(8)}"
+
   /** Write `df` as a fresh immutable version dir; returns its name. */
   private def writeVersion(df: DataFrame, rootPath: Path,
                            fs: FileSystem): String = {
@@ -167,44 +213,18 @@ object OnlineTable {
         .sorted.lastOption
         .flatMap(n => scala.util.Try(n.stripPrefix("v-").take(13).toLong).toOption)
         .getOrElse(0L)
-    val ts = math.max(System.currentTimeMillis(), prevTs + 1)
-    val version = f"v-$ts%013d-${java.util.UUID.randomUUID().toString.take(8)}"
+    val version =
+      freshName("v-", math.max(System.currentTimeMillis(), prevTs + 1))
     df.write.mode("errorifexists")
       .parquet(new Path(rootPath, version).toString)
     version
   }
 
-  /** Post-commit bookkeeping: flip the `_CURRENT` cache, retain the
-    * newest `keepVersions` committed snapshots, drop orphans and stale
-    * commit files, collect superseded legacy part-files. */
-  private def finalizeCommit(spark: SparkSession, fs: FileSystem,
-                             rootPath: Path, version: String,
-                             keepVersions: Int,
-                             hadLogBefore: Boolean): Unit = {
-    // _CURRENT cache flip — BEST-EFFORT by design: the commit log is
-    // authoritative (currentVersion consults it first), so a lost flip
-    // race can never misdirect a reader. Concurrent flips on a local
-    // filesystem can collide inside rename-OVERWRITE's delete+rename
-    // window (FileAlreadyExists) — retry a few times, then give up and
-    // leave the cache stale; the next publish heals it.
-    val fc = FileContext.getFileContext(rootPath.toUri,
-      spark.sessionState.newHadoopConf())
-    val tmp = new Path(rootPath, s".$CurrentFile.$version.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(version.getBytes("UTF-8")) finally out.close()
-    var flips = 0
-    var flipped = false
-    while (!flipped && flips < 3) {
-      flips += 1
-      try {
-        fc.rename(tmp, new Path(rootPath, CurrentFile), Options.Rename.OVERWRITE)
-        flipped = true
-      } catch {
-        case _: java.io.IOException if flips < 3 => Thread.sleep(10L * flips)
-        case _: java.io.IOException => fs.delete(tmp, false) // stay stale
-      }
-    }
-    // GC: the log defines commit order; keep the newest keepVersions
+  /** Post-commit GC: retain the newest `keepVersions` committed
+    * snapshots, drop orphans and stale commit files. */
+  private def collectGarbage(fs: FileSystem, rootPath: Path,
+                             keepVersions: Int): Unit = {
+    // the log defines commit order; keep the newest keepVersions
     // committed snapshots (a crashed publish's orphan was never
     // committed, so it is dropped regardless of age)
     val entries = logEntries(fs, rootPath)
@@ -259,22 +279,6 @@ object OnlineTable {
     entries.dropRight(keepVersions).foreach { case (seq, _) =>
       fs.delete(new Path(new Path(rootPath, CommitDir), f"c-$seq%012d"), false)
     }
-    // legacy migration tail: plain part-files written by a pre-versioning
-    // writer served as the live snapshot until the FIRST commit (whose
-    // merge read them via read()); like any superseded snapshot they are
-    // retained one publish cycle for in-flight readers, then collected
-    if (hadLogBefore)
-      legacyFiles(fs, rootPath).foreach(p => fs.delete(p, false))
-  }
-
-  /** If the table predates the commit log (pointer file only), backfill
-    * its pointer as seq 0 so the log is complete before CAS commits
-    * race above it. Collision-safe: concurrent backfills write identical
-    * content, and the exclusive create admits one. */
-  private def backfillLegacyPointer(fs: FileSystem, rootPath: Path): Unit = {
-    val ptr = new Path(rootPath, CurrentFile)
-    if (logEntries(fs, rootPath).isEmpty && fs.exists(ptr))
-      tryCommit(fs, rootPath, 0L, readSmall(fs, ptr))
   }
 
   /** Publish `df` as the new live snapshot of the table at `root`,
@@ -286,22 +290,9 @@ object OnlineTable {
     * the log exactly once, in commit order. */
   def publish(df: DataFrame, root: String, keepVersions: Int = 2): Unit = {
     require(keepVersions >= 2, "keepVersions must be >= 2")
-    val spark = df.sparkSession
-    val (fs, rootPath) = fsOf(spark, root)
-    backfillLegacyPointer(fs, rootPath)
-    val hadLog = head(fs, rootPath).isDefined
+    val (fs, rootPath) = fsOf(df.sparkSession, root)
     val version = writeVersion(df, rootPath, fs)
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      attempt += 1
-      require(attempt <= PublishRetries,
-        s"publish: $PublishRetries commit collisions at $root — " +
-          "pathological contention or a filesystem without exclusive create")
-      val seq = head(fs, rootPath).map(_._1).getOrElse(0L) + 1L
-      committed = tryCommit(fs, rootPath, seq, version)
-    }
-    finalizeCommit(spark, fs, rootPath, version, keepVersions, hadLog)
+    casLoop(fs, rootPath, keepVersions)(_ => Some(version))
   }
 
   /** Compare-and-set publish: commit ONLY if the live version is still
@@ -315,57 +306,30 @@ object OnlineTable {
   def publishIf(df: DataFrame, root: String, expected: Option[String],
                 keepVersions: Int = 2): Unit = {
     require(keepVersions >= 2, "keepVersions must be >= 2")
-    val spark = df.sparkSession
-    val (fs, rootPath) = fsOf(spark, root)
-    backfillLegacyPointer(fs, rootPath)
+    val (fs, rootPath) = fsOf(df.sparkSession, root)
     val h0 = head(fs, rootPath)
     if (h0.map(_._2) != expected)
       throw ConcurrentPublishException(expected, h0.map(_._2))
     val version = writeVersion(df, rootPath, fs)
-    val seq = h0.map(_._1).getOrElse(0L) + 1L
-    if (!tryCommit(fs, rootPath, seq, version)) {
-      // someone took our seq: the expectation is stale by definition
-      throw ConcurrentPublishException(expected,
-        head(fs, rootPath).map(_._2))
-    }
-    finalizeCommit(spark, fs, rootPath, version, keepVersions,
-      hadLogBefore = h0.isDefined)
+    // someone took our seq: the expectation is stale by definition
+    if (!commitAfter(fs, rootPath, h0, version, keepVersions))
+      throw ConcurrentPublishException(expected, head(fs, rootPath).map(_._2))
   }
 
-  /** Read-modify-write publish loop — the production shape over
-    * [[publishIf]]: read the live snapshot (None if never published),
-    * derive the next one with `derive`, CAS-commit; on a lost race
-    * RE-DERIVE from the winner's snapshot and try again, so no
+  /** Read-modify-write publish: read the live snapshot (None if never
+    * published), derive the next one with `derive`, CAS-commit; on a
+    * lost race RE-DERIVE from the winner's snapshot and try again, so no
     * publisher's contribution is silently dropped (the lost-update
-    * anomaly the unconditional [[publish]] permits by design). Bounded
-    * by `maxRetries` — each retry means another writer committed, so
-    * the loop starves only under pathological contention, and then it
-    * fails loudly with the final conflict. */
+    * anomaly the unconditional [[publish]] permits by design). */
   def publishMerge(spark: SparkSession, root: String,
                    derive: Option[DataFrame] => DataFrame,
-                   keepVersions: Int = 2, maxRetries: Int = 10): Unit = {
-    var attempt = 0
-    var last: ConcurrentPublishException = null
-    while (attempt < maxRetries) {
-      attempt += 1
-      val expected = currentVersion(spark, root)
-      // pin the snapshot to the EXPECTED version (read() could see a
-      // newer commit landing between the two calls — harmless, but the
-      // derive would then be working ahead of its own expectation);
-      // an expected=None table may still carry a legacy plain-parquet
-      // snapshot, which read() serves
-      val snapshot = expected match {
-        case Some(v) => Some(readVersion(spark, root, v))
-        case None => read(spark, root)
-      }
-      try {
-        publishIf(derive(snapshot), root, expected, keepVersions)
-        return
-      } catch {
-        case e: ConcurrentPublishException => last = e // re-derive, retry
-      }
+                   keepVersions: Int = 2): Unit = {
+    val (fs, rootPath) = fsOf(spark, root)
+    casLoop(fs, rootPath, keepVersions) { h0 =>
+      // the snapshot is pinned to the head this attempt commits over
+      val prev = h0.map { case (_, v) => snapshot(spark, fs, rootPath, v) }
+      Some(writeVersion(derive(prev), rootPath, fs))
     }
-    throw last
   }
 
   // ---- Bucketed incremental snapshots --------------------------------
@@ -405,8 +369,7 @@ object OnlineTable {
 
   private def writeManifest(fs: FileSystem, rootPath: Path,
                             m: Manifest): String = {
-    val name = f"$ManifestPrefix${System.currentTimeMillis()}%013d-" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val name = freshName(ManifestPrefix)
     val body = (s"nbuckets=${m.nBuckets}" +:
       m.entries.toSeq.sortBy(_._1).map { case (b, rel) => s"$b\t$rel" })
       .mkString("\n")
@@ -415,116 +378,102 @@ object OnlineTable {
     name
   }
 
-  private def bucketExpr(key: Seq[String], n: Int) =
-    org.apache.spark.sql.functions.pmod(
-      org.apache.spark.sql.functions.xxhash64(
-        key.map(org.apache.spark.sql.functions.col): _*),
-      org.apache.spark.sql.functions.lit(n.toLong)).cast("int")
+  /** Paths of the manifest's bucket dirs whose bucket `keep` admits,
+    * bucket-ascending. */
+  private def bucketPaths(rootPath: Path, man: Manifest,
+                          keep: Int => Boolean): Seq[String] =
+    man.entries.toSeq.sortBy(_._1)
+      .collect { case (b, rel) if keep(b) => new Path(rootPath, rel).toString }
+
+  /** The hash bucket of each row of `df`. Integral key columns hash as
+    * bigint, so writer and reader agree on placement whatever integral
+    * type each carries (an int64 request against an int key column). */
+  private def bucketExpr(df: DataFrame, key: Seq[String], n: Int): Column =
+    pmod(xxhash64(key.map { k =>
+      df.select(k).schema.head.dataType match {
+        case ByteType | ShortType | IntegerType => col(k).cast(LongType)
+        case _ => col(k)
+      }
+    }: _*), lit(n.toLong)).cast("int")
+
+  /** Write `df` hash-bucketed by `key` into `n` buckets as one fresh
+    * immutable generation dir; returns bucket -> root-relative dir for
+    * every bucket that received rows (none: the dir is removed). */
+  private def writeGeneration(df: DataFrame, key: Seq[String], n: Int,
+                              fs: FileSystem, rootPath: Path): Map[Int, String] = {
+    val genRel = freshName(GenPrefix)
+    val genPath = new Path(rootPath, genRel)
+    df.withColumn(BucketCol, bucketExpr(df, key, n))
+      .write.partitionBy(BucketCol).parquet(genPath.toString)
+    val written = fs.listStatus(genPath).toSeq
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith(s"$BucketCol="))
+      .map { st =>
+        st.getPath.getName.stripPrefix(s"$BucketCol=").toInt ->
+          s"$genRel/${st.getPath.getName}"
+      }.toMap
+    if (written.isEmpty) fs.delete(genPath, true)
+    written
+  }
 
   /** Incremental bucketed publish of one upsert batch.
     *
     * Reads the live snapshot's manifest, merges `batch` with ONLY the
     * buckets it touches (`merge(prevTouchedRows, batchRows)` — the
     * caller owns the upsert semantics, e.g. latest-per-key of the
-    * union), writes those buckets as one `partitionBy` generation dir,
-    * and CAS-commits a manifest that re-points touched buckets and
-    * keeps every other bucket's existing dir. A lost race re-derives
-    * from the winner's manifest (publishMerge's loop, per-bucket); a
-    * crash leaves only an unreferenced gen dir + manifest file,
-    * collected by the next publish after the grace window.
+    * union), writes those buckets as one generation dir, and
+    * CAS-commits a manifest that re-points touched buckets and keeps
+    * every other bucket's existing dir. A lost race re-derives from the
+    * winner's manifest; a crash leaves only an unreferenced gen dir +
+    * manifest file, collected by the next publish after the grace
+    * window.
     *
-    * First publish (or a legacy/full `v-` head) bucketizes everything
-    * once; afterwards `nBuckets` is pinned by the live manifest and the
+    * First publish (or a full `v-` head) bucketizes everything once;
+    * afterwards `nBuckets` is pinned by the live manifest and the
     * parameter is ignored. The merged result for a touched bucket may
     * be empty (a delete-style merge) — that bucket simply leaves the
     * manifest; a table cannot become entirely empty this way. */
   def publishBucketedBatch(batch: DataFrame, root: String,
                            key: Seq[String],
                            merge: (DataFrame, DataFrame) => DataFrame,
-                           nBuckets: Int = 64, keepVersions: Int = 2,
-                           maxRetries: Int = 10): Unit = {
-    require(keepVersions >= 2, "keepVersions must be >= 2")
+                           nBuckets: Int = 64, keepVersions: Int = 2): Unit = {
     require(nBuckets >= 1, "nBuckets must be >= 1")
     val spark = batch.sparkSession
     val (fs, rootPath) = fsOf(spark, root)
-    backfillLegacyPointer(fs, rootPath)
-    var attempt = 0
-    var last: Throwable = null
-    while (attempt < maxRetries) {
-      attempt += 1
-      val h0 = head(fs, rootPath)
-      val seq = h0.map(_._1).getOrElse(0L) + 1L
-      // the derive+write stage reads the previous gen dirs LAZILY: a
-      // concurrent publisher's GC may evict the manifest we resolved
-      // and collect its gens mid-scan — that surfaces as a missing-file
-      // failure, not a commit collision, and deserves the same
-      // re-derive-from-the-new-head retry
-      try {
-        val prevMan = h0.map(_._2).filter(isManifest)
-          .map(readManifest(fs, rootPath, _))
-        val n = prevMan.map(_.nBuckets).getOrElse(nBuckets)
-        val (merged, replacedBuckets, kept) = prevMan match {
+    casLoop(fs, rootPath, keepVersions) { h0 =>
+      val prevMan = h0.map(_._2).filter(isManifest)
+        .map(readManifest(fs, rootPath, _))
+      val n = prevMan.fold(nBuckets)(_.nBuckets)
+      // first publish, or migration of a full snapshot: every bucket is
+      // touched exactly once
+      val touched = prevMan.fold((0 until n).toSet)(_ =>
+        batch.select(bucketExpr(batch, key, n).as(BucketCol))
+          .distinct().collect().map(_.getInt(0)).toSet)
+      if (touched.isEmpty) None // empty batch: nothing to change
+      else {
+        val prev = prevMan match {
           case Some(man) =>
-            val touched = batch.select(bucketExpr(key, n).as(BucketCol))
-              .distinct().collect().map(_.getInt(0)).toSeq.sorted
-            if (touched.isEmpty) return // empty batch: nothing to change
-            val prevPaths = touched.flatMap(man.entries.get)
-              .map(rel => new Path(rootPath, rel).toString)
-            val prevRows =
-              if (prevPaths.isEmpty) batch.limit(0)
-              else spark.read.parquet(prevPaths: _*)
-            (merge(prevRows, batch), touched.toSet,
-              man.entries -- touched)
+            val paths = bucketPaths(rootPath, man, touched)
+            if (paths.isEmpty) batch.limit(0) else spark.read.parquet(paths: _*)
           case None =>
-            // first publish, or migration of a full/legacy snapshot:
-            // every bucket is touched exactly once
-            val prevAll = h0.map(_._2) match {
-              case Some(v) => readVersion(spark, root, v)
-              case None => read(spark, root).getOrElse(batch.limit(0))
-            }
-            (merge(prevAll, batch), (0 until n).toSet,
-              Map.empty[Int, String])
+            h0.fold(batch.limit(0)) { case (_, v) => snapshot(spark, fs, rootPath, v) }
         }
-        val genRel = f"$GenPrefix${System.currentTimeMillis()}%013d-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        merged.withColumn(BucketCol, bucketExpr(key, n))
-          .write.partitionBy(BucketCol)
-          .parquet(new Path(rootPath, genRel).toString)
-        val written = fs.listStatus(new Path(rootPath, genRel)).toSeq
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith(s"$BucketCol="))
-          .map { st =>
-            st.getPath.getName.stripPrefix(s"$BucketCol=").toInt ->
-              s"$genRel/${st.getPath.getName}"
-          }.toMap
-        require(written.keySet.subsetOf(replacedBuckets),
+        val written = writeGeneration(merge(prev, batch), key, n, fs, rootPath)
+        require(written.keySet.subsetOf(touched),
           "merge produced rows outside the touched buckets — the merge " +
             "callback must not invent keys the batch does not carry")
-        val entries = kept ++ written
-        if (entries.isEmpty) {
-          // nothing merged out: on a FIRST publish this is just an
-          // empty micro-batch against a never-published table (a
-          // stream's first trigger is often empty) — a no-op, not an
-          // error; on a LIVE table it would tear the whole table down
-          fs.delete(new Path(rootPath, genRel), true)
-          if (h0.isEmpty) return
-          throw new IllegalArgumentException(
-            "bucketed publish would leave an empty table — use publish()")
-        }
-        val mName = writeManifest(fs, rootPath, Manifest(n, entries))
-        if (tryCommit(fs, rootPath, seq, mName)) {
-          finalizeCommit(spark, fs, rootPath, mName, keepVersions,
-            hadLogBefore = h0.isDefined)
-          return
-        }
-        // lost the race: leave the orphan gen/manifest to GC, re-derive
-        last = ConcurrentPublishException(h0.map(_._2),
-          head(fs, rootPath).map(_._2))
-      } catch {
-        case e if isMissingFiles(e) => last = e // head moved: re-derive
+        val entries = prevMan.fold(Map.empty[Int, String])(_.entries -- touched) ++
+          written
+        if (entries.nonEmpty) Some(writeManifest(fs, rootPath, Manifest(n, entries)))
+        // nothing merged out: on a FIRST publish this is just an empty
+        // micro-batch against a never-published table (a stream's first
+        // trigger is often empty) — a no-op, not an error; on a LIVE
+        // table it would tear the whole table down
+        else if (h0.isEmpty) None
+        else throw new IllegalArgumentException(
+          "bucketed publish would leave an empty table — use publish()")
       }
     }
-    throw last
   }
 
   /** A scan/derive failure rooted in files vanishing mid-read — the
@@ -548,6 +497,20 @@ object OnlineTable {
     false
   }
 
+  /** CAS-committed compaction of a bucketed table: every micro-batch
+    * publish adds one generation dir for its touched buckets, so a
+    * long-running upsert stream leaves each bucket's rows scattered
+    * across many small files under many gens; compaction rewrites the
+    * live snapshot into ONE fresh generation (same bucket count) and
+    * commits it through the log. Readers and concurrent upserts follow
+    * the [[rebucket]] safety argument verbatim — this IS a rebucket at
+    * the live count (or `nBuckets` for a full head that was never
+    * bucketed), read afresh at every attempt. Run it on the maintenance
+    * cadence small-file pressure dictates, not per batch. */
+  def compact(spark: SparkSession, root: String, key: Seq[String],
+              nBuckets: Int = 64, keepVersions: Int = 2): Unit =
+    rewriteBuckets(spark, root, key, keepVersions)(_.fold(nBuckets)(_.nBuckets))
+
   /** CAS-committed re-bucketing migration: rewrite the live snapshot as
     * a fresh bucketed generation at `newBuckets` hash buckets, committed
     * through the same exclusive-create log. The manifest pins its bucket
@@ -560,72 +523,27 @@ object OnlineTable {
     * winner's snapshot (and vice versa — the upsert loop re-derives over
     * the new bucket count it finds at ITS retry). No-op if the table was
     * never published or is empty. */
-  /** CAS-committed compaction of a bucketed table: every micro-batch
-    * publish adds one generation dir for its touched buckets, so a
-    * long-running upsert stream leaves each bucket's rows scattered
-    * across many small files under many gens; compaction rewrites the
-    * live snapshot into ONE fresh generation (same bucket count) and
-    * commits it through the log. Readers and concurrent upserts follow
-    * the [[rebucket]] safety argument verbatim — this IS a rebucket at
-    * the current count (or `nBuckets` for a full/legacy head that was
-    * never bucketed). Run it on the maintenance cadence small-file
-    * pressure dictates, not per batch. */
-  def compact(spark: SparkSession, root: String, key: Seq[String],
-              nBuckets: Int = 64, keepVersions: Int = 2,
-              maxRetries: Int = 10): Unit = {
-    val (fs, rootPath) = fsOf(spark, root)
-    val n = head(fs, rootPath).map(_._2).filter(isManifest)
-      .map(readManifest(fs, rootPath, _).nBuckets)
-      .getOrElse(nBuckets)
-    rebucket(spark, root, key, n, keepVersions, maxRetries)
+  def rebucket(spark: SparkSession, root: String, key: Seq[String],
+               newBuckets: Int, keepVersions: Int = 2): Unit = {
+    require(newBuckets >= 1, "newBuckets must be >= 1")
+    rewriteBuckets(spark, root, key, keepVersions)(_ => newBuckets)
   }
 
-  def rebucket(spark: SparkSession, root: String, key: Seq[String],
-               newBuckets: Int, keepVersions: Int = 2,
-               maxRetries: Int = 10): Unit = {
-    require(newBuckets >= 1, "newBuckets must be >= 1")
-    require(keepVersions >= 2, "keepVersions must be >= 2")
+  /** Rewrite the live snapshot as one generation at the bucket count
+    * `count` picks from the live manifest (None: a full `v-` head). */
+  private def rewriteBuckets(spark: SparkSession, root: String,
+                             key: Seq[String], keepVersions: Int)(
+      count: Option[Manifest] => Int): Unit = {
     val (fs, rootPath) = fsOf(spark, root)
-    backfillLegacyPointer(fs, rootPath)
-    var attempt = 0
-    var last: Throwable = null
-    while (attempt < maxRetries) {
-      attempt += 1
-      val h0 = head(fs, rootPath)
-      if (h0.isEmpty) return // never published: nothing to migrate
-      val seq = h0.get._1 + 1L
-      try {
-        val snapshot = readVersion(spark, root, h0.get._2)
-        val genRel = f"$GenPrefix${System.currentTimeMillis()}%013d-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        snapshot.withColumn(BucketCol, bucketExpr(key, newBuckets))
-          .write.partitionBy(BucketCol)
-          .parquet(new Path(rootPath, genRel).toString)
-        val written = fs.listStatus(new Path(rootPath, genRel)).toSeq
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith(s"$BucketCol="))
-          .map { st =>
-            st.getPath.getName.stripPrefix(s"$BucketCol=").toInt ->
-              s"$genRel/${st.getPath.getName}"
-          }.toMap
-        if (written.isEmpty) { // empty snapshot: nothing to rebucket
-          fs.delete(new Path(rootPath, genRel), true)
-          return
-        }
-        val mName = writeManifest(fs, rootPath,
-          Manifest(newBuckets, written))
-        if (tryCommit(fs, rootPath, seq, mName)) {
-          finalizeCommit(spark, fs, rootPath, mName, keepVersions,
-            hadLogBefore = true)
-          return
-        }
-        last = ConcurrentPublishException(Some(h0.get._2),
-          head(fs, rootPath).map(_._2))
-      } catch {
-        case e if isMissingFiles(e) => last = e // head moved: re-derive
+    casLoop(fs, rootPath, keepVersions) { h0 =>
+      h0.flatMap { case (_, v) =>
+        val n = count(Some(v).filter(isManifest).map(readManifest(fs, rootPath, _)))
+        val written = writeGeneration(snapshot(spark, fs, rootPath, v),
+          key, n, fs, rootPath)
+        if (written.isEmpty) None // empty snapshot: nothing to rewrite
+        else Some(writeManifest(fs, rootPath, Manifest(n, written)))
       }
     }
-    throw last
   }
 
   /** Bucket-pruned point lookup against the live snapshot: for a
@@ -633,96 +551,62 @@ object OnlineTable {
     * bucketed table needs to scan ONLY the gen dirs of the buckets the
     * keys hash into — O(|keys|) files instead of the whole entity
     * table, the read-side half of the bucketed-publish bargain. Falls
-    * back to a full-snapshot scan for non-bucketed versions, and to
-    * the legacy plain-parquet snapshot [[read]] serves for tables that
-    * predate versioning (an upgrade never silently drops previously
-    * materialized entities). Returns None only if nothing was ever
-    * written. */
+    * back to a full-snapshot scan for non-bucketed versions. Returns
+    * None only if the table was never published. */
   def lookup(spark: SparkSession, root: String, key: Seq[String],
-             keys: DataFrame): Option[DataFrame] =
-    currentVersion(spark, root) match {
-      case None =>
-        // legacy pre-versioning table: no log, no pointer — read()
-        // still serves its plain part-files as the live snapshot
-        read(spark, root).map(_.join(
-          org.apache.spark.sql.functions.broadcast(keys), key))
-      case Some(v) =>
-        val snapshot =
-          if (!isManifest(v)) readVersion(spark, root, v)
-          else {
-            val (fs, rootPath) = fsOf(spark, root)
-            val man = readManifest(fs, rootPath, v)
-            val touched = keys
-              .select(bucketExpr(key, man.nBuckets).as(BucketCol))
-              .distinct().collect().map(_.getInt(0)).toSet
-            val paths = man.entries.toSeq.sortBy(_._1)
-              .collect { case (b, rel) if touched(b) =>
-                new Path(rootPath, rel).toString }
-            if (paths.isEmpty)
-              readVersion(spark, root, v).limit(0) // no key hits any bucket
-            else spark.read.parquet(paths: _*)
-          }
-        Some(snapshot.join(
-          org.apache.spark.sql.functions.broadcast(keys), key))
+             keys: DataFrame): Option[DataFrame] = {
+    val (fs, rootPath) = fsOf(spark, root)
+    head(fs, rootPath).map { case (_, v) =>
+      val snap =
+        if (!isManifest(v)) snapshot(spark, fs, rootPath, v)
+        else {
+          val man = readManifest(fs, rootPath, v)
+          val touched = keys
+            .select(bucketExpr(keys, key, man.nBuckets).as(BucketCol))
+            .distinct().collect().map(_.getInt(0)).toSet
+          val paths = bucketPaths(rootPath, man, touched)
+          if (paths.isEmpty)
+            snapshot(spark, fs, rootPath, v).limit(0) // no key hits any bucket
+          else spark.read.parquet(paths: _*)
+        }
+      snap.join(broadcast(keys), key)
     }
-
-  /** Data files of a pre-versioning (plain parquet dir) online table. */
-  private def legacyFiles(fs: FileSystem, rootPath: Path): Seq[Path] =
-    if (!fs.exists(rootPath)) Nil
-    else fs.listStatus(rootPath).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .map(_.getPath)
+  }
 
   /** Retained snapshot versions in COMMIT order, oldest first (current
     * is last) — read straight off the log, so orphans from crashed or
     * lost-race publishes never appear. */
   def listVersions(spark: SparkSession, root: String): Seq[String] = {
     val (fs, rootPath) = fsOf(spark, root)
-    val logged = logEntries(fs, rootPath).map(_._2)
-    val all =
-      if (logged.nonEmpty) logged
-      else head(fs, rootPath).map(_._2).toSeq // legacy pointer table
-    all.filter(v => fs.exists(new Path(rootPath, v)))
+    logEntries(fs, rootPath).map(_._2)
+      .filter(v => fs.exists(new Path(rootPath, v)))
   }
 
-  /** Time-travel read of a retained snapshot (see [[listVersions]]) —
-    * a full `v-` dir directly, a bucketed `m-` manifest via its
-    * referenced bucket-generation dirs. */
-  def readVersion(spark: SparkSession, root: String, version: String): DataFrame =
-    if (isManifest(version)) {
-      val (fs, rootPath) = fsOf(spark, root)
-      val man = readManifest(fs, rootPath, version)
-      val paths = man.entries.toSeq.sortBy(_._1)
-        .map { case (_, rel) => new Path(rootPath, rel).toString }
-      spark.read.parquet(paths: _*)
-    } else spark.read.parquet(new Path(new Path(root), version).toString)
+  /** A retained version's rows — a full `v-` dir directly, a bucketed
+    * `m-` manifest via its referenced bucket-generation dirs. */
+  private def snapshot(spark: SparkSession, fs: FileSystem, rootPath: Path,
+                       version: String): DataFrame =
+    if (isManifest(version))
+      spark.read.parquet(
+        bucketPaths(rootPath, readManifest(fs, rootPath, version), _ => true): _*)
+    else spark.read.parquet(new Path(rootPath, version).toString)
 
-  /** The live version name, if the table has ever been published. The
-    * COMMIT LOG is authoritative; the `_CURRENT` pointer only serves
-    * tables that predate the log (and debugging eyes). */
+  /** Time-travel read of a retained snapshot (see [[listVersions]]). */
+  def readVersion(spark: SparkSession, root: String, version: String): DataFrame = {
+    val (fs, rootPath) = fsOf(spark, root)
+    snapshot(spark, fs, rootPath, version)
+  }
+
+  /** The live version name — the commit-log head — if the table has
+    * ever been published. */
   def currentVersion(spark: SparkSession, root: String): Option[String] = {
     val (fs, rootPath) = fsOf(spark, root)
     head(fs, rootPath).map(_._2)
   }
 
-  /** Read the live snapshot. A plain-parquet dir written by a
-    * pre-versioning writer (no pointer, no log) is served as the live
-    * snapshot so an upgrade never silently drops previously materialized
-    * entities; the first publish merges and supersedes it. Empty option
-    * only if nothing was ever written. */
-  def read(spark: SparkSession, root: String): Option[DataFrame] =
-    currentVersion(spark, root) match {
-      case Some(v) =>
-        Some(readVersion(spark, root, v))
-      case None =>
-        val (fs, rootPath) = fsOf(spark, root)
-        val legacy = legacyFiles(fs, rootPath)
-        if (legacy.isEmpty) None
-        // explicit file list: the root may also hold v- dirs from a
-        // crashed first publish, which must not be swept into the scan
-        else Some(spark.read.parquet(legacy.map(_.toString): _*))
-    }
-
-  def exists(spark: SparkSession, root: String): Boolean =
-    read(spark, root).isDefined
+  /** Read the live snapshot; None if the table was never published. */
+  def read(spark: SparkSession, root: String): Option[DataFrame] = {
+    val (fs, rootPath) = fsOf(spark, root)
+    head(fs, rootPath).map { case (_, v) => snapshot(spark, fs, rootPath, v) }
+  }
 }

@@ -159,22 +159,6 @@ class OnlineTableSpec extends AnyFunSuite {
     assert(OnlineTable.read(spark, root2).get.count() === 1L)
   }
 
-  test("commit log is authoritative over a stale _CURRENT cache") {
-    val root = java.nio.file.Files.createTempDirectory("ot8").toString + "/t"
-    OnlineTable.publish(Seq((1L, "one")).toDF("k", "v"), root)
-    OnlineTable.publish(Seq((1L, "two")).toDF("k", "v"), root)
-    val headV = OnlineTable.currentVersion(spark, root).get
-    // simulate a crash between commit and cache flip: point the cache
-    // at the PREVIOUS version; resolution must heal from the log
-    val stale = OnlineTable.listVersions(spark, root).head
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "_CURRENT"), stale.getBytes)
-    assert(OnlineTable.currentVersion(spark, root) === Some(headV),
-      "the log, not the pointer cache, must resolve the live version")
-    assert(OnlineTable.read(spark, root).get
-      .select("v").as[String].head() === "two")
-  }
-
   test("time travel: deeper retention keeps history readable by version") {
     val root = java.nio.file.Files.createTempDirectory("ot4").toString + "/t"
     OnlineTable.publish(Seq((1L, "gen1")).toDF("k", "v"), root, keepVersions = 3)
@@ -192,29 +176,6 @@ class OnlineTableSpec extends AnyFunSuite {
     assert(vs2.size === 3 && !vs2.contains(vs.head))
     assert(OnlineTable.read(spark, root).get
       .select("v").as[String].head() === "gen4")
-  }
-
-  test("legacy plain-parquet table is readable and migrated by publishes") {
-    val root = java.nio.file.Files.createTempDirectory("ot5").toString + "/t"
-    // a pre-versioning writer left plain part-files at the root
-    Seq((1L, "old"), (2L, "keep")).toDF("k", "v")
-      .write.parquet(root)
-    assert(OnlineTable.read(spark, root).get.count() === 2,
-      "legacy layout must be served as the live snapshot")
-    // first versioned publish merges over it (as upsertOnline would)
-    val merged = OnlineTable.read(spark, root).get
-      .filter(col("k") =!= 1L)
-      .unionByName(Seq((1L, "new")).toDF("k", "v"))
-    OnlineTable.publish(merged, root)
-    val out = OnlineTable.read(spark, root).get
-      .as[(Long, String)].collect().toMap
-    assert(out === Map(1L -> "new", 2L -> "keep"))
-    // legacy files are retained one cycle (in-flight readers), then GC'd
-    def legacyCount = new java.io.File(root).listFiles()
-      .count(f => f.isFile && f.getName.startsWith("part-"))
-    assert(legacyCount > 0, "legacy retained for one publish cycle")
-    OnlineTable.publish(out.toSeq.toDF("k", "v"), root)
-    assert(legacyCount === 0, "legacy collected on the next publish")
   }
 
   // ---- bucketed incremental publish ---------------------------------
@@ -350,26 +311,26 @@ class OnlineTableSpec extends AnyFunSuite {
     // a key set hashing to no published bucket returns empty, not error
     assert(OnlineTable.lookup(spark, root, Seq("k"),
       Seq(987654321L).toDF("k")).get.count() >= 0L)
+    // an INT key column serves int and bigint requests alike (bigint is
+    // Feast's entity key type): both hash to the buckets the rows are in
+    val rootInt = java.nio.file.Files.createTempDirectory("otb5i").toString + "/t"
+    OnlineTable.publishBucketedBatch(
+      (1 to 300).map(kk => (kk, 1L, s"v$kk")).toDF("k", "ts", "v"),
+      rootInt, Seq("k"), m, nBuckets = 16)
+    val want = (1L to 16L).map(kk => (kk, s"v$kk")).toSet
+    Seq((1L to 16L).toDF("k"), (1 to 16).toDF("k")).foreach { ks =>
+      val hits = OnlineTable.lookup(spark, rootInt, Seq("k"), ks).get
+        .select(col("k").cast("long"), col("v")).as[(Long, String)]
+        .collect().toSet
+      assert(hits === want, s"${ks.schema("k").dataType} keys missed " +
+        s"${want -- hits}")
+    }
     // non-bucketed snapshot: same API, full-scan fallback
     val root2 = java.nio.file.Files.createTempDirectory("otb6").toString + "/t"
     OnlineTable.publish(Seq((1L, 1L, "x")).toDF("k", "ts", "v"), root2)
     assert(OnlineTable.lookup(spark, root2, Seq("k"), Seq(1L).toDF("k"))
       .get.count() === 1L)
     assert(OnlineTable.lookup(spark, root2 + "_never", Seq("k"),
-      Seq(1L).toDF("k")).isEmpty)
-  }
-
-  test("lookup serves a legacy plain-parquet table (no log, no pointer)") {
-    val root = java.nio.file.Files.createTempDirectory("otb7").toString + "/t"
-    // a pre-versioning writer left plain part-files at the root; read()
-    // deliberately serves them and lookup must not regress that
-    Seq((1L, "old"), (2L, "keep")).toDF("k", "v").write.parquet(root)
-    val out = OnlineTable.lookup(spark, root, Seq("k"), Seq(2L).toDF("k"))
-    assert(out.isDefined, "legacy table must be served, not 'never published'")
-    assert(out.get.select("k", "v").as[(Long, String)].collect().toSet ===
-      Set((2L, "keep")))
-    // a genuinely never-written root still returns None
-    assert(OnlineTable.lookup(spark, root + "_never", Seq("k"),
       Seq(1L).toDF("k")).isEmpty)
   }
 
@@ -402,13 +363,13 @@ class OnlineTableSpec extends AnyFunSuite {
     // rebucket 4 -> 16 while upserts race it through the same CAS log
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val rb = new Thread(() =>
-      try OnlineTable.rebucket(spark, root, Seq("k"), 16, maxRetries = 20)
+      try OnlineTable.rebucket(spark, root, Seq("k"), 16)
       catch { case e: Throwable => errs.add(e) })
     val up = new Thread(() =>
       try (1 to 3).foreach { i =>
         OnlineTable.publishBucketedBatch(
           Seq((i.toLong, 2L, s"upd$i")).toDF("k", "ts", "v"),
-          root, Seq("k"), m, maxRetries = 20)
+          root, Seq("k"), m)
       } catch { case e: Throwable => errs.add(e) })
     rb.start(); up.start(); rb.join(180000); up.join(180000)
     assert(errs.isEmpty, s"rebucket/upsert race must be absorbed: $errs")
@@ -502,16 +463,16 @@ class OnlineTableSpec extends AnyFunSuite {
       }
     })
     val rb = new Thread(() =>
-      try OnlineTable.rebucket(spark, root, Seq("k"), 16, maxRetries = 40)
+      try OnlineTable.rebucket(spark, root, Seq("k"), 16)
       catch { case e: Throwable => errs.add(e) })
     val cp = new Thread(() =>
-      try OnlineTable.compact(spark, root, Seq("k"), maxRetries = 40)
+      try OnlineTable.compact(spark, root, Seq("k"))
       catch { case e: Throwable => errs.add(e) })
     val up = new Thread(() =>
       try (1 to 5).foreach { i =>
         OnlineTable.publishBucketedBatch(
           Seq((i.toLong, 3L, s"upd$i")).toDF("k", "ts", "v"),
-          root, Seq("k"), m, maxRetries = 40)
+          root, Seq("k"), m)
       } catch { case e: Throwable => errs.add(e) })
     reader.start(); rb.start(); cp.start(); up.start()
     rb.join(180000); cp.join(180000); up.join(180000)
