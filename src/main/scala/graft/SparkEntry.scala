@@ -84,13 +84,9 @@ object SparkEntry {
     * long gone — the age guard keeps a live concurrent run's tree safe. */
   private val ScratchStaleMs = 6L * 3600 * 1000
   private def scratchDir(purpose: String, dir: String): String = {
-    import java.nio.file.{Files, Path, Paths}
+    import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    def rmTree(p: Path): Unit = if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally st.close()
-    }
+    import IvfIndex.rmTree
     val tag = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     val prefix = s"graft_scratch_${purpose}_$tag"
@@ -108,11 +104,6 @@ object SparkEntry {
     rmTree(p)
     p.toString
   }
-
-  /** Per-sfDir fitted IVF centroid index (q39): built + persisted +
-    * loaded once per JVM, probed thereafter. */
-  private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfIndex.Model]()
 
   /** q39's IVF settings, chosen from the measured recall-vs-cost curve
     * (SCALING.md "ANN recall"): on the near-random fixture embeddings
@@ -141,71 +132,39 @@ object SparkEntry {
     * with the oracle so the two can never diverge. */
   private val Q297Budget = 256
 
-  /** q76's per-dir learned BPE merge tables — fit once per JVM per dir,
-    * and the record that lets [[q76OracleSql]] inline the EXACT merges
-    * that run used (same single-probed-dir rule as [[ivfDigestByDir]]:
-    * the oracle emits only when exactly one dir was fit, Verify's shape,
-    * and otherwise omits q76 -> rows-only fallback). */
-  private val bpeByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Bpe.Merges]()
+  // ---- Run state: what each run-state query fitted or computed in this
+  // JVM, inlined by its oracle twin (Verify dumps oracle SQL after the
+  // queries ran). Every oracle follows RunState's sole-dir rule.
+
+  /** The persisted IVF index each of q39/q89/q240/q273/q294/q297/q298
+    * probed, with its cells path: acquired once per JVM per content key
+    * ([[ivfAcquire]]). Keyed by that key (dir, embeddings files, nlist),
+    * so a dataset regenerated in place, or a second nlist, counts as a
+    * second dir and the oracles omit rather than guess which index ran. */
+  private[graft] val ivfState = new RunState[(IvfIndex.Model, String)]
+
+  /** q76's learned BPE merge tables, fit once per dir. */
+  private val bpeState = new RunState[Bpe.Merges]
   private val Q76Merges = 64
 
-  /** q142's per-dir heavy-hitters record — same record/emission contract
-    * as [[bpeByDir]]: the oracle inlines the EXACT top-K (token,
-    * lower-bound count) entries and decrement offset this run computed
-    * (all integers — no float-literal round-trip concerns), and DuckDB
-    * independently recomputes the exact counts those bounds must
-    * bracket. */
-  private val hhByDir = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[graft.llm.Sketches.HeavyHitter], Long)]()
+  /** q142's heavy-hitters record: the top-K (token, lower-bound count)
+    * entries and the decrement offset (all integers — no float-literal
+    * round-trip concerns); DuckDB recomputes the exact counts those
+    * bounds must bracket. */
+  private val hhState =
+    new RunState[(Seq[graft.llm.Sketches.HeavyHitter], Long)]
   private val Q142K = 64
   private val Q142Top = 20
 
-  /** q239's per-dir fitted PQ codebooks — same record/emission contract
-    * as [[bpeByDir]]: the oracle inlines the EXACT float-rounded
-    * centroids this run fit (shortest-repr double literals round-trip
-    * DuckDB's parser bit-identically — the q39 technique) and re-derives
-    * codes, ADC scores, and ranks independently. */
-  private val pqByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Pq.Model]()
+  /** q239/q240's fitted PQ codebooks, fit once per dir: the oracles inline
+    * the float-rounded centroids (shortest-repr double literals
+    * round-trip DuckDB's parser bit-identically — the q39 technique). */
+  private val pqState = new RunState[Pq.Model]
   private val PqM = 8
   private val PqKsub = 16
 
-  /** q80's per-dir waterfilled mix rates — same record/emission contract
-    * as [[bpeByDir]]: the oracle inlines the exact rates this run
-    * computed (shortest-repr double literals round-trip DuckDB's parser
-    * bit-identically — the q24/q39 technique). */
-  private val mixRatesByDir = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[Option[String], Double]]()
-
-  /** Digest of each sfDir's q39 probe in this JVM, keyed BY DIR — lets
-    * [[oracleSql]] inline the EXACT centroids that run used (Verify dumps
-    * oracle SQL after the queries execute), so KMeans fit nondeterminism
-    * can never split the Spark result from its DuckDB twin. Dir-keyed so a
-    * JVM that probes several sfDirs (multi-SF bench sweeps) can never leak
-    * one dataset's centroids into another's dump: the oracle emits only
-    * when exactly ONE dir was probed — Verify's shape — and otherwise
-    * omits q39, degrading to the driver's rows-only check instead of
-    * risking a wrong twin ([[soleDigest]]). */
-  private val ivfDigestByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The exactly-one-probed-dir rule, separated for spec coverage. */
-  private[graft] def soleDigest(ds: Iterable[String]): Option[String] =
-    ds.toSet.toList match { case d :: Nil => Some(d); case _ => None }
-
-  /** Test hook: snapshot/override the probed-dir record (SparkEntrySpec
-    * exercises the multi-dir omission without probing a second dataset). */
-  private[graft] def ivfDigestSnapshot: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    ivfDigestByDir.asScala.toMap
-  }
-  private[graft] def ivfDigestRestore(m: Map[String, String]): Unit = {
-    ivfDigestByDir.clear()
-    m.foreach { case (k, v) => ivfDigestByDir.put(k, v) }
-  }
-  private[graft] def ivfDigestRecord(dir: String, digest: String): Unit =
-    ivfDigestByDir.put(dir, digest)
+  /** q80's waterfilled mix rates (shortest-repr double literals). */
+  private val mixRatesState = new RunState[Map[Option[String], Double]]
 
   /** Flagship query on sf0.001: the reference's full Bronze->Silver spine —
     * KV parse -> broadcast join -> invalid-sample filter -> typed wide
@@ -213,24 +172,21 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q14_bronze_silver")(spark, "/root/testdata/sf0.001")
 
-  /** Acquire the per-(dir, dataset-content) persisted IVF index — build
-    * + atomic-publish on first use, load thereafter — and record its
-    * digest for the run-state oracles. Returns the model and the
-    * published index root (centroids/ + cells/). Hoisted from q39 so
-    * q89's cluster-balanced sampling shares the IDENTICAL index and
-    * digest-emission rule; `corpus` must be (nid, nvec)-shaped. */
+  /** The per-(dir, dataset-content) persisted IVF index — built and
+    * published on first use in any JVM ([[IvfIndex.acquire]]), held in
+    * [[ivfState]] thereafter. Returns the model and the cells path.
+    * Shared by q39 and every query that must see the IDENTICAL index;
+    * `corpus` must be (nid, nvec)-shaped. */
   private def ivfAcquire(s: SparkSession, dir: String,
                          corpus: DataFrame,
-                         nlist: Int = Q39Nlist): (IvfIndex.Model, java.nio.file.Path) = {
+                         nlist: Int = Q39Nlist): (IvfIndex.Model, String) = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    // The cache key — in memory AND on disk — is (dir, dataset content):
-    // the MD5 folds in the embeddings files' (name, size, mtime)
-    // alongside the full dir string (hashCode collides across strings;
-    // a path-only key would silently reuse stale centroids after the
-    // dataset at that path is regenerated, within this JVM or across
-    // JVMs). The fingerprint is a handful of file stats — computed per
-    // call, cheap next to any probe.
+    // The content key folds in the embeddings files' (name, size, mtime)
+    // alongside the full dir string: a path-only key would silently reuse
+    // stale centroids after the dataset at that path is regenerated,
+    // within this JVM or across JVMs. A handful of file stats — computed
+    // per call, cheap next to any probe.
     val embPath = Paths.get(dir, "embeddings.parquet")
     val contentFp = if (Files.exists(embPath)) {
       val st = Files.walk(embPath)
@@ -241,61 +197,29 @@ object SparkEntry {
         .mkString("|")
       finally st.close()
     } else ""
-    // the layout+params tag versions the on-disk tree: a JVM running
-    // older code (centroids-only layout, nlist=16) and this one can
-    // never load each other's index dirs
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest((dir + "\u0000" + contentFp +
-        s"\u0000ivf2:nlist=$nlist").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_ivf_$digest")
-    val fin = base.resolve("index")
-    val index = ivfCache.computeIfAbsent(digest, _ => {
-      // stable per-digest path so repeated JVM runs reuse one directory
-      // instead of leaking a fresh tempdir each. Published by
-      // write-to-unique-temp + atomic rename: a concurrent JVM benching
-      // the same dir either wins the rename or loads the winner's
-      // fully-written index — never a torn or wrong-dataset read
-      // tolerates a concurrent sweeper deleting the tree under us
-      def rmTree(p: java.nio.file.Path): Unit =
-        try {
-          val st = Files.walk(p)
-          try st.iterator().asScala.toSeq
-            .reverse.foreach(Files.deleteIfExists(_))
-          finally st.close()
-        } catch { case _: java.nio.file.NoSuchFileException => () }
-      if (!Files.exists(fin)) {
-        val tmp = base.resolve(s"index.tmp.${ProcessHandle.current().pid()}")
-        // BOTH halves of the index are built offline then published as
-        // one atomic tree: centroids/ (driver-sized) and cells/ (the
-        // inverted file — corpus partitioned by cell, what lets the
-        // probe read only probed cells)
-        val m = IvfIndex.fit(corpus, nlist = nlist)
-        m.save(s, tmp.resolve("centroids").toString)
-        IvfIndex.buildInverted(corpus, m, tmp.resolve("cells").toString)
-        // atomic rename, concurrent-publisher-safe; the non-atomic-move
-        // fallback re-checks under an exclusive lock (IvfIndex.publish)
-        IvfIndex.publish(tmp, fin)
-        // sweep index.tmp.* leaked by CRASHED builders only: an hour-old
-        // age floor keeps a concurrent builder's live tmp out of reach
-        // (a whole build is seconds), and rmTree tolerates the
-        // mirror-image race of two sweepers
-        if (Files.isDirectory(base)) {
-          val ls = Files.list(base)
-          try ls.iterator().asScala
-            .filter(_.getFileName.toString.startsWith("index.tmp."))
-            .filter(p => try Files.getLastModifiedTime(p).toMillis <
-                System.currentTimeMillis() - 3600L * 1000
-              catch { case _: Exception => false })
-            .foreach(p => try rmTree(p) catch { case _: Exception => () })
-          finally ls.close()
-        }
-      }
-      IvfIndex.load(s, fin.resolve("centroids").toString)
-    })
-    ivfDigestByDir.put(dir, digest)
-    (index, fin)
+    val key = dir + "\u0000" + contentFp
+    ivfState.getOrFit(s"$key\u0000$nlist")(
+      IvfIndex.acquire(s, corpus, key, nlist))
   }
+
+  /** One DuckDB list of `model`'s cell scores over the DOUBLE[] column
+    * `ev`, in cell order: score_i(v) = v·c_i − ||c_i||²/2, identical to
+    * Similarity.ivfCell's. Centroid floats widen to exact doubles, whose
+    * shortest-repr text round-trips DuckDB's parser bit-identically (the
+    * q24 technique); the ||c||²/2 terms are literals too, so the only
+    * arithmetic both engines perform is the same left-to-right dot fold.
+    * The argmax position minus one is the cell (first max wins = lowest
+    * cell on ties, like Spark's `array_position`). */
+  private def ivfScoresSql(m: IvfIndex.Model): String =
+    m.centroids.sortBy(_._1).map { case (_, cv, n2) =>
+      val dot = s"list_sum(list_apply(list_zip(ev, " +
+        s"[${cv.map(_.toDouble).mkString(",")}]), x -> x[1] * x[2]))"
+      s"($dot - ${n2 / 2})"
+    }.mkString("[\n    ", ",\n    ", "]")
+
+  /** `model`'s cell ids in [[ivfScoresSql]]'s order, as a DuckDB list. */
+  private def ivfCellIdsSql(m: IvfIndex.Model): String =
+    m.centroids.map(_._1).sorted.mkString("[", ",", "]")
 
   /** The declared query catalog. CACHING CONTRACT for embedders: some
     * queries `persist()` multi-referenced intermediates inside their
@@ -580,12 +504,7 @@ object SparkEntry {
 
     // ---- Structured Streaming: latest-per-key materialization (T1-T6) ---
     "q23_stream_latest" -> ((s, dir) => {
-      // statePartitions = 8: per-stream-load state sizing (the q77
-      // discipline) — a fixture-sized stream pays one state-store commit
-      // per partition per operator per micro-batch, so 32 partitions of
-      // near-empty state is pure commit overhead. Results are
-      // partition-count-invariant (hash-partitioned state, same keys).
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q23_mem_${System.nanoTime()}", "complete") { sc =>
         val schema = Tables(sc, dir, "events").schema
         // file-source streams need a directory: stream the sf dir with a
@@ -593,7 +512,7 @@ object SparkEntry {
         val stream = Tables.stream(sc, dir, "events")
           .withColumn("ts_us", Tables.tsUsOf(schema))
           .select("user_id", "event_id", "ts_us", "event_type", "value")
-        Streams.latestPerKey(stream, Seq("user_id"), "ts_us", "event_id")
+        PointInTime.latestPerKey(stream, Seq("user_id"), "ts_us", "event_id")
       }.ordered(col("user_id"))
     }),
 
@@ -602,8 +521,7 @@ object SparkEntry {
     // mode; distinct aggregates are unsupported on streams, so the
     // payload aggregates are count + exact decimal sum) ----------------
     "q63_stream_window" -> ((s, dir) => {
-      // statePartitions = 8: the q23/q77 per-stream-load state sizing
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q63_mem_${System.nanoTime()}", "complete") { sc =>
         val schema = Tables(sc, dir, "events").schema
         Tables.stream(sc, dir, "events")
@@ -669,11 +587,11 @@ object SparkEntry {
       val queries = emb.filter(col("vec_id") % 20 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val corpus = emb.select(col("vec_id").as("nid"), col("embedding").as("nvec"))
-      val (index, fin) = ivfAcquire(s, dir, corpus)
+      val (index, cells) = ivfAcquire(s, dir, corpus)
       // probe the PERSISTED inverted file: the scan prunes to the probed
       // cells' partitions — no corpus-wide centroid scoring per run
-      Similarity.ivfTopKPersisted(queries, fin.resolve("cells").toString,
-          k = 5, index, nprobe = Q39Nprobe)
+      Similarity.ivfTopKPersisted(queries, cells, k = 5, index,
+          nprobe = Q39Nprobe)
         .ordered(col("qid"), col("rank"))
     }),
 
@@ -1700,8 +1618,7 @@ object SparkEntry {
     // watermark is late by the strict-inequality rule and silently
     // dropped — measured: doc 0 vanished without the offset).
     "q71_stream_dedup" -> ((s, dir) => {
-      // statePartitions = 8: the q23/q77 per-stream-load state sizing
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q71_mem_${System.nanoTime()}", "append") { sc =>
         val stream = Tables.stream(sc, dir, "documents")
           .withColumn("evt",
@@ -2015,9 +1932,8 @@ object SparkEntry {
     // algorithm on this corpus.
     "q76_bpe_tokenize" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents").filter(col("text").isNotNull)
-      val merges = bpeByDir.computeIfAbsent(dir,
-        d => Bpe.fit(Tables(s, d, "documents").filter(col("text").isNotNull),
-          "text", numMerges = Q76Merges))
+      val merges = bpeState.getOrFit(dir)(
+        Bpe.fit(docs, "text", numMerges = Q76Merges))
       docs.select(col("doc_id"),
           Bpe.applyBpe(col("text"), merges).as("bpe_tokens"))
         .withColumn("n_bpe",
@@ -2190,7 +2106,7 @@ object SparkEntry {
       val total = counts.values.sum
       val rates = Mix.temperatureRates(counts, alpha = 0.5,
         targetRows = total / 2)
-      mixRatesByDir.put(dir, rates)
+      mixRatesState.record(dir, rates)
       Mix.sample(docs, "doc_id", "source", rates)
         .select("doc_id", "source")
         .ordered(col("doc_id"))
@@ -2282,17 +2198,7 @@ object SparkEntry {
     // final watermark clears every real window — a production stream
     // advances it naturally (see streamAsofEnrich scaladoc).
     "q77_stream_asof" -> ((s, dir) => {
-      // State-partition sizing is per-stream-load tuning: this query runs
-      // TWO chained stateful operators whose per-batch cost is dominated
-      // by state-store commits (one per partition per operator per
-      // batch), and 32 partitions of state for a fixture-sized stream is
-      // pure commit overhead (measured: ~1/3 of wall at 32 vs 8).
-      // Partitioning does not affect results (hash-partitioned state,
-      // same keys either way — the oracle pins it). Passed as an explicit
-      // runToMemoryIsolated argument — the stream builds and runs on a
-      // cloned session, so no shared-conf mutation and no race with
-      // concurrent callers.
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q77_mem_${System.nanoTime()}", "append") { sc =>
       val schema = Tables(sc, dir, "events").schema
       def raw = Tables.stream(sc, dir, "events")
@@ -2533,10 +2439,7 @@ object SparkEntry {
     // driver before it acts — the q77 lesson).
     "q103_stream_session" -> ((s, dir) => {
       val sentKey = Long.MinValue + 1L
-      // state-partition sizing: one stateful operator on a fixture-sized
-      // stream — 8 partitions of state, commits dominate otherwise (q77);
-      // explicit runToMemoryIsolated argument, no shared-conf mutation
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q103_mem_${System.nanoTime()}", "append") { sc =>
       val schema = Tables(sc, dir, "events").schema
       def raw = Tables.stream(sc, dir, "events")
@@ -3110,7 +3013,7 @@ object SparkEntry {
     // join+group; value sums ride the exact-decimal discipline so the
     // float result is order-insensitive.
     "q123_stream_static" -> ((s, dir) => {
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q123_mem_${System.nanoTime()}", "complete") { sc =>
         val schema = Tables(sc, dir, "events").schema
         val raw = Tables.stream(sc, dir, "events")
@@ -3609,8 +3512,7 @@ object SparkEntry {
     // [0,512)x256 — width 2.0, dyadic midpoints. Oracle replays the
     // batch-equivalent windows (streaming must equal batch semantics).
     "q136_stream_quantile" -> ((s, dir) => {
-      // statePartitions = 8: the q23/q77 per-stream-load state sizing
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q136_mem_${System.nanoTime()}", "complete") { sc =>
         val schema = Tables(sc, dir, "events").schema
         Tables.stream(sc, dir, "events")
@@ -3638,8 +3540,7 @@ object SparkEntry {
     // answer. The oracle builds each window's registers directly from
     // the raw hashes (q130's SQL per window).
     "q165_stream_hll" -> ((s, dir) => {
-      // statePartitions = 8: the q23/q77 per-stream-load state sizing
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q165_mem_${System.nanoTime()}", "complete") { sc =>
         val schema = Tables(sc, dir, "events").schema
         val h31 = shiftrightunsigned(
@@ -3845,7 +3746,7 @@ object SparkEntry {
         .select(explode(TextStats.tokens(lower(col("text")))).as("tok"))
       val (entries, off, _) = Sketches.heavyHittersOrdered(toks, "tok", Q142K)
       val top = entries.take(Q142Top)
-      hhByDir.put(dir, (top, off))
+      hhState.record(dir, (top, off))
       val topDf = top.zipWithIndex
         .map { case (h, i) => (i + 1L, h.key, h.count) }
         .toDF("rank", "token", "est_low")
@@ -6651,10 +6552,7 @@ object SparkEntry {
         .agg(Sketches.histogram(col("value"), lo, hi, bins).as("sk"))
         .collect()(0).getSeq[Long](0)
       val d38 = "decimal(38,0)"
-      // statePartitions = 8: the q23/q77 per-stream-load state sizing
-      // (the ref histogram above is batch work on the parent session;
-      // only the stream builds on the clone)
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q235_mem_${System.nanoTime()}", "complete") { sc =>
         val schema = Tables(sc, dir, "events").schema
         val stream = Tables.stream(sc, dir, "events")
@@ -6789,8 +6687,8 @@ object SparkEntry {
       val corpus = emb.select(col("vec_id").as("nid"),
         col("embedding").as("nvec"))
       val (index, _) = ivfAcquire(s, dir, corpus)
-      val pq = pqByDir.computeIfAbsent(dir,
-        _ => Pq.fit(emb, "embedding", m = PqM, ksub = PqKsub))
+      val pq = pqState.getOrFit(dir)(
+        Pq.fit(emb, "embedding", m = PqM, ksub = PqKsub))
       val encoded = Pq.encode(corpus, "nvec", pq)
         .withColumn("cell", Similarity.ivfCell(col("nvec"), index))
         .drop("nvec")
@@ -7314,9 +7212,7 @@ object SparkEntry {
       // contract-small: one (med, mad) pair per event type
       val baseline: Map[String, (Long, Long)] = mm.collect()
         .map(r => r.getString(0) -> (r.getLong(2), r.getLong(1))).toMap
-      // statePartitions = 8: the q23/q77 per-stream-load state sizing
-      // (the MAD baseline above is batch work on the parent session)
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q250_mem_${System.nanoTime()}", "append") { sc =>
         val schema = Tables(sc, dir, "events").schema
         // Tables.stream carries the layout branch (single-file fixture vs
@@ -7898,8 +7794,8 @@ object SparkEntry {
     "q239_pq_topk" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
-      val model = pqByDir.computeIfAbsent(dir,
-        _ => Pq.fit(emb, "embedding", m = PqM, ksub = PqKsub))
+      val model = pqState.getOrFit(dir)(
+        Pq.fit(emb, "embedding", m = PqM, ksub = PqKsub))
       val encoded = Pq.encode(
         emb.select(col("vec_id").as("nid"), col("embedding").as("nv")),
         "nv", model).drop("nv")
@@ -8189,8 +8085,7 @@ object SparkEntry {
     // contract degrades to the q142 bracket, pinned by SketchesSpec,
     // not claimed by this oracle.
     "q145_stream_topk" -> ((s, dir) => {
-      // statePartitions = 8: the q23/q77 per-stream-load state sizing
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q145_mem_${System.nanoTime()}", "complete") { sc =>
         val schema = Tables(sc, dir, "events").schema
         Tables.stream(sc, dir, "events")
@@ -8533,8 +8428,7 @@ object SparkEntry {
       // is a bounded AvailableNow replay and the final day's window
       // must be emitted (append would hold it forever — the watermark
       // never passes its end). See driftWindows' output-mode contract.
-      // statePartitions = 8: the q23/q77 per-stream-load state sizing.
-      val perWin = Streams.runToMemoryIsolated(s, statePartitions = 8,
+      val perWin = Streams.runToMemoryIsolated(s,
           s"q286_mem_${System.nanoTime()}", "complete") { sc =>
         val schema = Tables(sc, dir, "events").schema
         val stream = Tables.stream(sc, dir, "events")
@@ -8850,7 +8744,7 @@ object SparkEntry {
     // — 100 TB posture: state scales with (keys × band density), never
     // the stream's history.
     "q293_stream_interval_join" -> ((s, dir) => {
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q293_mem_${System.nanoTime()}", "append") { sc =>
         val schema = Tables(sc, dir, "events").schema
         def raw = Tables.stream(sc, dir, "events")
@@ -8891,7 +8785,7 @@ object SparkEntry {
     "q295_unclicked_impressions" -> ((s, dir) => {
       val evKey = Long.MinValue + 1L
       val ftKey = Long.MinValue + 2L
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q295_mem_${System.nanoTime()}", "append") { sc =>
         val schema = Tables(sc, dir, "events").schema
         def raw = Tables.stream(sc, dir, "events")
@@ -8952,7 +8846,7 @@ object SparkEntry {
     "q296_ctr_labels" -> ((s, dir) => {
       val evKey = Long.MinValue + 1L
       val ftKey = Long.MinValue + 2L
-      Streams.runToMemoryIsolated(s, statePartitions = 8,
+      Streams.runToMemoryIsolated(s,
           s"q296_mem_${System.nanoTime()}", "append") { sc =>
         val schema = Tables(sc, dir, "events").schema
         def raw = Tables.stream(sc, dir, "events")
@@ -9015,9 +8909,9 @@ object SparkEntry {
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val corpus = emb.select(col("vec_id").as("nid"),
         col("embedding").as("nvec"))
-      val (index, fin) = ivfAcquire(s, dir, corpus)
-      Similarity.ivfTopKBudgeted(queries, fin.resolve("cells").toString,
-          k = 5, index, nprobe = Q39Nprobe, budget = Q297Budget)
+      val (index, cells) = ivfAcquire(s, dir, corpus)
+      Similarity.ivfTopKBudgeted(queries, cells, k = 5, index,
+          nprobe = Q39Nprobe, budget = Q297Budget)
         .ordered(col("qid"), col("rank"))
     }),
 
@@ -9043,12 +8937,11 @@ object SparkEntry {
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val corpus = emb.select(col("vec_id").as("nid"),
         col("embedding").as("nvec"))
-      val (index, fin) = ivfAcquire(s, dir, corpus)
+      val (index, cells) = ivfAcquire(s, dir, corpus)
       val exact = Similarity.cosineTopK(queries, corpus, k = 5)
         .select(col("qid"), col("nid"))
-      val approx = Similarity.ivfTopKBudgeted(queries,
-          fin.resolve("cells").toString, k = 5, index,
-          nprobe = Q39Nprobe, budget = Q297Budget)
+      val approx = Similarity.ivfTopKBudgeted(queries, cells, k = 5,
+          index, nprobe = Q39Nprobe, budget = Q297Budget)
         .select(col("qid"), col("nid"))
       val ne = exact.groupBy(col("qid")).agg(count(lit(1)).as("n_exact"))
       val hits = approx.join(exact, Seq("qid", "nid"), "left_semi")
@@ -9129,12 +9022,7 @@ object SparkEntry {
       } finally {
         // eager cleanup: the result is materialized above, nothing lazy
         // still reads the tree
-        val st = java.nio.file.Files.walk(tmp)
-        try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        } finally st.close()
+        IvfIndex.rmTree(tmp)
       }
       import scala.jdk.CollectionConverters._
       s.createDataFrame(out.toSeq.asJava,
@@ -9680,8 +9568,7 @@ object SparkEntry {
     "q272_stream_auc" -> ((s, dir) => {
       val d38 = "decimal(38,0)"
       def r6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      // statePartitions = 8: the q23/q77 per-stream-load state sizing
-      val grid = Streams.runToMemoryIsolated(s, statePartitions = 8,
+      val grid = Streams.runToMemoryIsolated(s,
           s"q272_mem_${System.nanoTime()}", "complete") { sc =>
         val schema = Tables(sc, dir, "events").schema
         Tables.stream(sc, dir, "events")
@@ -10413,8 +10300,8 @@ object SparkEntry {
     // tripwires and every oracle query are untouched.
     val nlist = math.max(Q39Nlist, (corpus.count() / 512L).toInt)
     val (index, _) = ivfAcquire(s, dir, corpus, nlist)
-    val pq = pqByDir.computeIfAbsent(dir,
-      _ => Pq.fit(emb, "embedding", m = PqM, ksub = PqKsub))
+    val pq = pqState.getOrFit(dir)(
+      Pq.fit(emb, "embedding", m = PqM, ksub = PqKsub))
     val encoded = Pq.encode(corpus, "nvec", pq)
       .withColumn("cell", Similarity.ivfCell(col("nvec"), index))
       .drop("nvec")
@@ -10518,15 +10405,8 @@ object SparkEntry {
     * dist² = ‖v‖² − 2·score, and the per-cell silhouette report —
     * everything recomputed from the inlined double literals. */
   private def q273OracleSql: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    soleDigest(ivfDigestByDir.values().asScala)
-      .flatMap(k => Option(ivfCache.get(k))).map { m =>
-      val cents = m.centroids.sortBy(_._1)
-      def dotSql(v: String, cv: Seq[Float]): String =
-        s"list_sum(list_apply(list_zip($v, [${cv.map(_.toDouble).mkString(",")}]), x -> x[1] * x[2]))"
-      val scores = cents.map { case (_, cv, n2) =>
-        s"(${dotSql("ev", cv)} - ${n2 / 2})" }
-        .mkString("[\n    ", ",\n    ", "]")
+    ivfState.sole.map { case (m, _) =>
+      val scores = ivfScoresSql(m)
       "q273_silhouette" ->
         s"""WITH v AS (
            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev
@@ -10593,11 +10473,9 @@ object SparkEntry {
     * DuckDB — per-subspace squared distances (same per-element fold
     * `list_sum` order as the Spark expressions), first-min argmin
     * codes, the ADC reconstruction dot, 1e-6 floor, rank, and the
-    * exact-cosine rider. Same exactly-one-fit-dir emission rule. */
+    * exact-cosine rider. Same sole-dir rule. */
   private def q239OracleSql: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val entries = pqByDir.asScala
-    soleDigest(entries.keys).map(entries(_)).map { m =>
+    pqState.sole.map { m =>
       val dCols = pqDistCols(m)
       val cCols = pqCodeCols(m)
       val adc = pqAdcExpr(m)
@@ -10634,22 +10512,14 @@ object SparkEntry {
   /** q240's run-state oracle: BOTH fitted models inlined — q39's cell
     * scores for assignment + probe selection, q239's codebooks for
     * codes + ADC — and the whole IVFPQ pipeline replayed in DuckDB.
-    * Emits only when both sole-fit-dir rules hold (Verify's shape). */
+    * Emits only when both states have a sole dir (Verify's shape). */
   private def q240OracleSql: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
     val sql = for {
-      ivfKey <- soleDigest(ivfDigestByDir.values().asScala)
-      ivf <- Option(ivfCache.get(ivfKey))
-      pqKey <- soleDigest(pqByDir.asScala.keys)
+      (ivf, _) <- ivfState.sole
+      m <- pqState.sole
     } yield {
-      val m = pqByDir.get(pqKey)
-      val cents = ivf.centroids.sortBy(_._1)
-      def dotSql(v: String, cv: Seq[Float]): String =
-        s"list_sum(list_apply(list_zip($v, [${cv.map(_.toDouble).mkString(",")}]), x -> x[1] * x[2]))"
-      val scores = cents.map { case (_, cv, n2) =>
-        s"(${dotSql("ev", cv)} - ${n2 / 2})" }
-        .mkString("[\n    ", ",\n    ", "]")
-      val cellIds = cents.map(_._1).mkString("[", ",", "]")
+      val scores = ivfScoresSql(ivf)
+      val cellIds = ivfCellIdsSql(ivf)
       s"""WITH v AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev
          |  FROM embeddings
@@ -10690,30 +10560,27 @@ object SparkEntry {
     * degenerate corpus (no tokens) or a multi-dir JVM omits → the
     * driver's rows-only check. */
   private def q142OracleSql: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val entries = hhByDir.asScala
-    soleDigest(entries.keys).map(entries(_))
-      .filter(_._1.nonEmpty).map { case (top, off) =>
-        def esc(s: String) = s.replace("'", "''")
-        val vals = top.zipWithIndex.map { case (h, i) =>
-          s"(${i + 1}, '${esc(h.key)}', ${h.count})"
-        }.mkString(",\n    ")
-        "q142_heavy_hitters" ->
-          s"""WITH top(rank, token, est_low) AS (VALUES
-             |    $vals),
-             |toks AS (SELECT
-             |    unnest(list_filter(string_split(lower(text),' '),
-             |      t -> len(t) > 0)) AS tok
-             |  FROM documents WHERE text IS NOT NULL),
-             |exact AS (SELECT tok AS token, CAST(COUNT(*) AS BIGINT)
-             |    AS exact_cnt FROM toks GROUP BY 1)
-             |SELECT CAST(rank AS BIGINT) AS rank, token,
-             |  CAST(est_low AS BIGINT) AS est_low, exact_cnt,
-             |  CAST($off AS BIGINT) AS err,
-             |  (est_low <= exact_cnt AND exact_cnt <= est_low + $off)
-             |    AS bound_ok
-             |FROM top JOIN exact USING (token) ORDER BY rank""".stripMargin
-      }.toMap
+    hhState.sole.filter(_._1.nonEmpty).map { case (top, off) =>
+      def esc(s: String) = s.replace("'", "''")
+      val vals = top.zipWithIndex.map { case (h, i) =>
+        s"(${i + 1}, '${esc(h.key)}', ${h.count})"
+      }.mkString(",\n    ")
+      "q142_heavy_hitters" ->
+        s"""WITH top(rank, token, est_low) AS (VALUES
+           |    $vals),
+           |toks AS (SELECT
+           |    unnest(list_filter(string_split(lower(text),' '),
+           |      t -> len(t) > 0)) AS tok
+           |  FROM documents WHERE text IS NOT NULL),
+           |exact AS (SELECT tok AS token, CAST(COUNT(*) AS BIGINT)
+           |    AS exact_cnt FROM toks GROUP BY 1)
+           |SELECT CAST(rank AS BIGINT) AS rank, token,
+           |  CAST(est_low AS BIGINT) AS est_low, exact_cnt,
+           |  CAST($off AS BIGINT) AS err,
+           |  (est_low <= exact_cnt AND exact_cnt <= est_low + $off)
+           |    AS bound_ok
+           |FROM top JOIN exact USING (token) ORDER BY rank""".stripMargin
+    }.toMap
   }
 
   /** The hand-written oracle twins, split from [[oracleSql]] so the
@@ -17813,34 +17680,20 @@ object SparkEntry {
   )
 
   /** q39's DuckDB twin, generated from the SAME fitted IVF index the Spark
-    * run probed in this JVM ([[ivfCache]]; Verify dumps oracle SQL AFTER
+    * run probed in this JVM ([[ivfState]]; Verify dumps oracle SQL AFTER
     * executing the queries, so the model is always present by dump time —
     * and because the centroids enter the SQL as literals from that exact
     * model, KMeans fit nondeterminism cannot split the engines). DuckDB
     * recomputes everything downstream of the fit: per-vector cell argmax
-    * (first-max-wins = lowest cell on ties, matching Spark's
-    * `array_position`), per-query top-`nprobe` cells (score desc, cell asc
-    * — the same total order ivfTopK's comparator sort uses), the cell
-    * equi-join, and the q19-proven cosine/rank pipeline. Centroid floats
-    * widen to exact doubles; `Double.toString` shortest-repr round-trips
-    * through DuckDB's parser bit-identically (the q24 technique). The
-    * ||c||²/2 terms are inlined as literals too, so the only arithmetic
-    * both engines perform is the identical left-to-right dot fold.
-    * Omitted — driver falls back to rows-only — if q39 never ran, or if
-    * MORE THAN ONE sfDir was probed in this JVM (the dump's single map
-    * entry could then name the wrong dataset's centroids; see
-    * [[ivfDigestByDir]]). */
+    * ([[ivfScoresSql]]), per-query top-`nprobe` cells (score desc, cell
+    * asc — the same total order ivfTopK's comparator sort uses), the cell
+    * equi-join, and the q19-proven cosine/rank pipeline. Omitted — q39
+    * falls back to the rows-only check — if it never ran, or if MORE THAN
+    * ONE index was probed in this JVM (RunState's sole-dir rule). */
   private def q39OracleSql: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    soleDigest(ivfDigestByDir.values().asScala)
-      .flatMap(k => Option(ivfCache.get(k))).map { m =>
-      val cents = m.centroids.sortBy(_._1) // cell order 0..nlist-1
-      def dotSql(v: String, cv: Seq[Float]): String =
-        s"list_sum(list_apply(list_zip($v, [${cv.map(_.toDouble).mkString(",")}]), x -> x[1] * x[2]))"
-      // score_i(v) = v·c_i − ||c_i||²/2 — identical to Similarity.ivfTopK
-      val scores = cents.map { case (_, cv, n2) =>
-        s"(${dotSql("ev", cv)} - ${n2 / 2})" }.mkString("[\n    ", ",\n    ", "]")
-      val cellIds = cents.map(_._1).mkString("[", ",", "]")
+    ivfState.sole.map { case (m, _) =>
+      val scores = ivfScoresSql(m)
+      val cellIds = ivfCellIdsSql(m)
       "q39_ivf_topk" ->
         s"""WITH v AS (
            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
@@ -17875,22 +17728,16 @@ object SparkEntry {
   }
 
   /** q297's oracle: the q39 probe replay (same fitted centroids, same
-    * single-probed-dir digest rule) EXTENDED with the budget mechanics —
-    * scan order (ROW_NUMBER by nid over each query's probed candidates),
+    * sole-dir rule) EXTENDED with the budget mechanics — scan order
+    * (ROW_NUMBER by nid over each query's probed candidates),
     * the per-query candidate count, truncation at the shared
     * [[Q297Budget]], and both ledger columns. A wrong scan order, a
     * candidate silently dropped before the ledger, or a ledger column
     * derived after truncation all hash-diverge. */
   private def q297OracleSql: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    soleDigest(ivfDigestByDir.values().asScala)
-      .flatMap(k => Option(ivfCache.get(k))).map { m =>
-      val cents = m.centroids.sortBy(_._1)
-      def dotSql(v: String, cv: Seq[Float]): String =
-        s"list_sum(list_apply(list_zip($v, [${cv.map(_.toDouble).mkString(",")}]), x -> x[1] * x[2]))"
-      val scores = cents.map { case (_, cv, n2) =>
-        s"(${dotSql("ev", cv)} - ${n2 / 2})" }.mkString("[\n    ", ",\n    ", "]")
-      val cellIds = cents.map(_._1).mkString("[", ",", "]")
+    ivfState.sole.map { case (m, _) =>
+      val scores = ivfScoresSql(m)
+      val cellIds = ivfCellIdsSql(m)
       "q297_ivf_budgeted_probe" ->
         s"""WITH v AS (
            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
@@ -17939,15 +17786,9 @@ object SparkEntry {
     * rank tie-break change, a budget constant fork) hash-diverges the
     * tripwire itself. */
   private def q298OracleSql: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    soleDigest(ivfDigestByDir.values().asScala)
-      .flatMap(k => Option(ivfCache.get(k))).map { m =>
-      val cents = m.centroids.sortBy(_._1)
-      def dotSql(v: String, cv: Seq[Float]): String =
-        s"list_sum(list_apply(list_zip($v, [${cv.map(_.toDouble).mkString(",")}]), x -> x[1] * x[2]))"
-      val scores = cents.map { case (_, cv, n2) =>
-        s"(${dotSql("ev", cv)} - ${n2 / 2})" }.mkString("[\n    ", ",\n    ", "]")
-      val cellIds = cents.map(_._1).mkString("[", ",", "]")
+    ivfState.sole.map { case (m, _) =>
+      val scores = ivfScoresSql(m)
+      val cellIds = ivfCellIdsSql(m)
       "q298_recall_tripwire" ->
         s"""WITH v AS (
            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
@@ -18007,19 +17848,13 @@ object SparkEntry {
   }
 
   /** q89's oracle: the SAME fitted index as q39 (identical
-    * single-probed-dir digest rule) replayed for cell assignment —
+    * sole-dir rule) replayed for cell assignment —
     * centroid scores as double literals, first-max tie-break — then
     * per-cell counts, rate = min(1, T/count), and the q66 md5-uniform
     * keep test, all recomputed from scratch in DuckDB. */
   private def q89OracleSql: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    soleDigest(ivfDigestByDir.values().asScala)
-      .flatMap(k => Option(ivfCache.get(k))).map { m =>
-      val cents = m.centroids.sortBy(_._1)
-      def dotSql(v: String, cv: Seq[Float]): String =
-        s"list_sum(list_apply(list_zip($v, [${cv.map(_.toDouble).mkString(",")}]), x -> x[1] * x[2]))"
-      val scores = cents.map { case (_, cv, n2) =>
-        s"(${dotSql("ev", cv)} - ${n2 / 2})" }.mkString("[\n    ", ",\n    ", "]")
+    ivfState.sole.map { case (m, _) =>
+      val scores = ivfScoresSql(m)
       "q89_cluster_sample" ->
         s"""WITH v AS (
            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
@@ -18045,16 +17880,10 @@ object SparkEntry {
     * scratch in DuckDB. Catches an append written to the wrong cell, a
     * miscounted empty cell, or a verdict arithmetic drift. */
   private def q294OracleSql: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    soleDigest(ivfDigestByDir.values().asScala)
-      .flatMap(k0 => Option(ivfCache.get(k0))).map { m =>
-      val cents = m.centroids.sortBy(_._1)
-      val k = cents.size
-      def dotSql(v: String, cv: Seq[Float]): String =
-        s"list_sum(list_apply(list_zip($v, [${cv.map(_.toDouble).mkString(",")}]), x -> x[1] * x[2]))"
-      val scores = cents.map { case (_, cv, n2) =>
-        s"(${dotSql("ev", cv)} - ${n2 / 2})" }.mkString("[\n    ", ",\n    ", "]")
-      val cellIds = cents.map(_._1).mkString("[", ",", "]")
+    ivfState.sole.map { case (m, _) =>
+      val k = m.centroids.size
+      val scores = ivfScoresSql(m)
+      val cellIds = ivfCellIdsSql(m)
       "q294_ivf_append_ledger" ->
         s"""WITH v AS (
            |  SELECT CAST(embedding AS DOUBLE[]) AS ev FROM embeddings
@@ -18090,11 +17919,9 @@ object SparkEntry {
 
   /** q80's oracle: the run's waterfilled rates inlined as literals over
     * the q66 md5-uniform, null source on its own branch. Same
-    * single-dir emission rule as the other run-state oracles. */
+    * sole-dir rule as the other run-state oracles. */
   private def q80OracleSql: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val entries = mixRatesByDir.asScala
-    soleDigest(entries.keys).map(entries(_)).map { rates =>
+    mixRatesState.sole.map { rates =>
       val cases = rates.collect { case (Some(s0), r) =>
         s"WHEN source = '${s0.replace("'", "''")}' THEN $r" }.mkString(" ")
       val nullRate = rates.getOrElse(None, 0.0)
@@ -18112,16 +17939,13 @@ object SparkEntry {
 
   /** q76's oracle, generated from the merges the run actually learned:
     * the identical bracketed replace-fold replayed as a recursive CTE (one
-    * iteration per merge rank). Same emission rule as [[q39OracleSql]] —
+    * iteration per merge rank). Same sole-dir rule as [[q39OracleSql]] —
     * exactly one fit dir, else omit (rows-only fallback). Single quotes in
     * learned symbols are SQL-escaped by doubling. */
   private def q76OracleSql: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val entries = bpeByDir.asScala
     // an empty merge table (degenerate corpus) would make the VALUES list
     // empty SQL — omit and fall back to rows-only
-    soleDigest(entries.keys).map(entries(_))
-      .filter(_.rules.nonEmpty).map { m =>
+    bpeState.sole.filter(_.rules.nonEmpty).map { m =>
       def esc(s: String) = s.replace("'", "''")
       val n = m.rules.size
       val vals = m.rules.zipWithIndex.map { case ((a, b), i) =>

@@ -68,13 +68,21 @@ object SilverToGold {
     val silver = spark.read.parquet(silverDir)
     val gold = SilverGold.toGold(silver, Aliccp.goldKeep,
       Aliccp.goldRawCopy, Aliccp.goldIndexCols)
-    gold.model.save(modelDir)
-    Sources.writeParquet(gold.table, goldDir)
-    val retrieval = SilverGold.retrievalSplit(gold.table)
-    Sources.writeParquet(retrieval, s"$goldDir-retrieval")
-    jdbc.foreach { case (url, table, user, password) =>
-      Sources.writeJdbc(gold.table, url, table, user, password)
-      Sources.writeJdbc(retrieval, url, s"${table}retrieval", user, password)
+    // every sink reads ONE computation of gold: no silver re-scan or
+    // re-join per sink, and one `created`/`datetime` stamp across them
+    val table = gold.table.persist()
+    try {
+      gold.model.save(modelDir)
+      Sources.writeParquet(table, goldDir)
+      val retrieval = SilverGold.retrievalSplit(table)
+      Sources.writeParquet(retrieval, s"$goldDir-retrieval")
+      jdbc.foreach { case (url, name, user, password) =>
+        Sources.writeJdbc(table, url, name, user, password)
+        Sources.writeJdbc(retrieval, url, s"${name}retrieval", user, password)
+      }
+    } finally {
+      table.unpersist(blocking = true)
+      gold.model.unpersist()
     }
   }
 

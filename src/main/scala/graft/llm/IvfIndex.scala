@@ -148,6 +148,56 @@ object IvfIndex {
     }
   }
 
+  /** Fit-once acquire of the persisted index for content key `key` (the
+    * caller's identity of the corpus — e.g. its dir plus its files' name,
+    * size and mtime): build and publish on first use in ANY JVM, load
+    * thereafter. Returns the model and the path of its inverted file
+    * (the `cells` tree [[Similarity.ivfTopKPersisted]] probes). The only
+    * code that knows the on-disk layout:
+    * `<java.io.tmpdir>/graft_ivf_<md5(key, nlist)>/index/{centroids,cells}`,
+    * a stable per-digest path so repeated runs reuse one directory instead
+    * of leaking a fresh tempdir each. Both halves are built offline into a
+    * unique tmp dir, then published as one tree by [[publish]]: a
+    * concurrent JVM building the same key either wins the rename or loads
+    * the winner's fully-written index — never a torn or wrong-dataset
+    * read. `corpus` must expose `nid` and the embedding as `nvec`. */
+  def acquire(spark: SparkSession, corpus: DataFrame, key: String,
+              nlist: Int): (Model, String) = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // the layout+params tag versions the on-disk tree: a JVM running
+    // older code (centroids-only layout, nlist=16) and this one can
+    // never load each other's index dirs
+    val digest = java.security.MessageDigest.getInstance("MD5")
+      .digest((key + s"\u0000ivf2:nlist=$nlist").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_ivf_$digest")
+    val fin = base.resolve("index")
+    if (!Files.exists(fin)) {
+      val tmp = base.resolve(s"index.tmp.${ProcessHandle.current().pid()}")
+      val m = fit(corpus, nlist = nlist)
+      m.save(spark, tmp.resolve("centroids").toString)
+      buildInverted(corpus, m, tmp.resolve("cells").toString)
+      publish(tmp, fin)
+      // sweep index.tmp.* leaked by CRASHED builders only: an hour-old
+      // age floor keeps a concurrent builder's live tmp out of reach
+      // (a whole build is seconds), and rmTree tolerates the
+      // mirror-image race of two sweepers
+      if (Files.isDirectory(base)) {
+        val ls = Files.list(base)
+        try ls.iterator().asScala
+          .filter(_.getFileName.toString.startsWith("index.tmp."))
+          .filter(p => try Files.getLastModifiedTime(p).toMillis <
+              System.currentTimeMillis() - 3600L * 1000
+            catch { case _: Exception => false })
+          .foreach(p => try rmTree(p) catch { case _: Exception => () })
+        finally ls.close()
+      }
+    }
+    (load(spark, fin.resolve("centroids").toString),
+      fin.resolve("cells").toString)
+  }
+
   /** Publish a fully-written index directory `tmp` to its final path
     * `fin` by atomic rename, safe under concurrent publishers: losing the
     * rename race is success (the winner's tree is complete — drop our
@@ -197,7 +247,8 @@ object IvfIndex {
     } finally ch.close()
   }
 
-  private def rmTree(p: java.nio.file.Path): Unit = {
+  /** Delete a tree, tolerating its concurrent removal. */
+  private[graft] def rmTree(p: java.nio.file.Path): Unit = {
     import java.nio.file.Files
     try {
       val st = Files.walk(p)

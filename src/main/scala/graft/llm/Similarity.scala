@@ -121,14 +121,24 @@ object Similarity {
     * job over the query batch). */
   def ivfTopKPersisted(queries: DataFrame, cellsPath: String, k: Int,
                        index: IvfIndex.Model, nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
+    val (queryCells, corpusCells) =
+      ivfProbePersisted(queries, cellsPath, index, nprobe)
+    ivfRank(queryCells, corpusCells, k)
+  }
+
+  /** The persisted probe's two sides: each query exploded to its
+    * `nprobe` best cells, and the inverted file's scan pruned to the
+    * cells some query probes (collected eagerly — one tiny job). */
+  private def ivfProbePersisted(queries: DataFrame, cellsPath: String,
+                                index: IvfIndex.Model,
+                                nprobe: Int): (DataFrame, DataFrame) = {
     val queryCells = queries.withColumn("cell",
       explode(ivfProbeCells(col("qvec"), index, nprobe)))
     val probed = queryCells.select("cell").distinct()
       .collect().map(_.getInt(0)).sorted
-    val corpusCells = spark.read.parquet(cellsPath)
+    val corpusCells = queries.sparkSession.read.parquet(cellsPath)
       .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
-    ivfRank(queryCells, corpusCells, k)
+    (queryCells, corpusCells)
   }
 
   /** BUDGETED probe of a persisted inverted file, with a truncation
@@ -158,13 +168,8 @@ object Similarity {
                       index: IvfIndex.Model, nprobe: Int,
                       budget: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = queries.sparkSession
-    val queryCells = queries.withColumn("cell",
-      explode(ivfProbeCells(col("qvec"), index, nprobe)))
-    val probed = queryCells.select("cell").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val corpusCells = spark.read.parquet(cellsPath)
-      .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
+    val (queryCells, corpusCells) =
+      ivfProbePersisted(queries, cellsPath, index, nprobe)
     val cand = queryCells.join(corpusCells, Seq("cell"))
       .filter(col("qid") =!= col("nid"))
     val wScan = Window.partitionBy("qid").orderBy(asc("nid"))

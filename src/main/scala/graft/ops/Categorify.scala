@@ -36,8 +36,18 @@ object Categorify {
   val BroadcastMaxRows: Long = 4L << 20
 
   /** One fitted vocabulary: column name -> lookup DataFrame
-    * (`value: string, idx: long`) plus its size (the unseen index). */
-  case class Model(lookups: Map[String, DataFrame], sizes: Map[String, Long]) {
+    * (`value: string, idx: long`) plus its size (the unseen index).
+    * `fitted` is the cached table [[fit]] derives every lookup from; a
+    * loaded model has none. */
+  case class Model(lookups: Map[String, DataFrame], sizes: Map[String, Long],
+                   fitted: Option[DataFrame] = None) {
+
+    /** Drop [[fitted]]'s cache once the model's outputs are written. The
+      * cached table's lineage pins its fit-time broadcast, whose hash
+      * relation holds a whole memory page (16.8 MB under a 2 GB heap) in
+      * the block manager for as long as the session lives. The lookups
+      * stay usable: they recompute. */
+    def unpersist(): Unit = fitted.foreach(_.unpersist(blocking = true))
 
     /** Replace each fitted column with its index (original value columns are
       * overwritten, like the reference's rename dance at
@@ -116,7 +126,8 @@ object Categorify {
     // distributed agg over the CACHED lookup table; #columns-row result
     val sizes = indexed.groupBy("c").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    Model(lookups, cols.map(c => c -> sizes.getOrElse(c, 0L)).toMap)
+    Model(lookups, cols.map(c => c -> sizes.getOrElse(c, 0L)).toMap,
+      Some(indexed))
   }
 
   def load(spark: SparkSession, path: String, cols: Seq[String]): Model = {

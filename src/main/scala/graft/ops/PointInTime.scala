@@ -19,6 +19,9 @@ object PointInTime {
     * the Redis online store's newest-value-per-key semantics — but ordered by
     * *event time* (ts, then tieBreak), not arrival order, which fixes the
     * reference's out-of-order upsert weakness (SURVEY.md §7.4 risk 4).
+    * On a stream it is a complete-mode aggregation (q23) whose state is
+    * one row per key; unbounded key spaces take
+    * [[graft.streaming.Streams.latestPerKeyStateful]].
     */
   def latestPerKey(df: DataFrame, key: Seq[String], ts: String,
                    tieBreak: String): DataFrame = {

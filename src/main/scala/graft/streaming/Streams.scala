@@ -49,26 +49,11 @@ object Streams {
       .trigger(Trigger.ProcessingTime(s"$triggerSecs seconds"))
       .outputMode("append")
 
-  /** Streaming latest-row-per-key — the online feature store's
-    * newest-value-per-entity semantics, but ordered by *event time* with a
-    * tie-break instead of arrival order (fixes the reference's Redis-upsert
-    * out-of-order weakness, SURVEY.md §7.4 risk 4). Complete-mode
-    * aggregation: state is one row per key (entity-sized, not data-sized).
-    * For unbounded key spaces pair with watermark + foreachBatch MERGE
-    * instead. */
-  def latestPerKey(stream: DataFrame, key: Seq[String], ts: String,
-                   tieBreak: String): DataFrame = {
-    val payloadCols = stream.columns.filterNot(key.contains)
-    val payload = struct(payloadCols.toSeq.map(col): _*)
-    stream.groupBy(key.map(col): _*)
-      .agg(max_by(payload, struct(col(ts), col(tieBreak))).as("__latest"))
-      .select(key.map(col) :+ col("__latest.*"): _*)
-  }
-
   /** Explicit-state latest-per-key via flatMapGroupsWithState — the
     * unbounded-key-space scale path that complete-mode aggregation can't
-    * serve (its result table grows without bound and is re-emitted fully
-    * every trigger). State here is one row per ACTIVE key, evicted by
+    * serve ([[graft.ops.PointInTime.latestPerKey]] on a stream is one: its
+    * result table grows without bound and is re-emitted fully every
+    * trigger). State here is one row per ACTIVE key, evicted by
     * processing-time timeout `ttl`, and only keys whose newest row CHANGED
     * are emitted each micro-batch (update semantics, like the online
     * store's upsert stream — but resolved by event time, not arrival).
@@ -176,17 +161,8 @@ object Streams {
     * strings. */
   def streamIntervalJoin(left: DataFrame, right: DataFrame, key: String,
                          leftTs: String, rightTs: String,
-                         delay: String, window: String): DataFrame = {
-    require(leftTs != rightTs,
-      "left/right event-time columns must have distinct names")
-    val l = left.withWatermark(leftTs, delay)
-    val r = right.withColumnRenamed(key, "__rk").withWatermark(rightTs, delay)
-    l.join(r, expr(
-      s"""$key = __rk AND
-         |$rightTs >= $leftTs AND
-         |$rightTs <= $leftTs + INTERVAL $window""".stripMargin))
-      .drop("__rk")
-  }
+                         delay: String, window: String): DataFrame =
+    intervalJoin(left, right, key, leftTs, rightTs, delay, window, "inner")
 
   /** OUTER variant of [[streamIntervalJoin]]: same key + time-band
     * condition, but unmatched LEFT rows are emitted with NULLs on the
@@ -208,7 +184,13 @@ object Streams {
   def streamIntervalJoinLeftOuter(left: DataFrame, right: DataFrame,
                                   key: String, leftTs: String,
                                   rightTs: String, delay: String,
-                                  window: String): DataFrame = {
+                                  window: String): DataFrame =
+    intervalJoin(left, right, key, leftTs, rightTs, delay, window,
+      "leftOuter")
+
+  private def intervalJoin(left: DataFrame, right: DataFrame, key: String,
+                           leftTs: String, rightTs: String, delay: String,
+                           window: String, joinType: String): DataFrame = {
     require(leftTs != rightTs,
       "left/right event-time columns must have distinct names")
     val l = left.withWatermark(leftTs, delay)
@@ -216,7 +198,7 @@ object Streams {
     l.join(r, expr(
       s"""$key = __rk AND
          |$rightTs >= $leftTs AND
-         |$rightTs <= $leftTs + INTERVAL $window""".stripMargin), "leftOuter")
+         |$rightTs <= $leftTs + INTERVAL $window""".stripMargin), joinType)
       .drop("__rk")
   }
 
@@ -553,27 +535,33 @@ object Streams {
     (rows, schema)
   }
 
-  /** [[runToMemory]] with the stream's state-partition count as an
-    * EXPLICIT per-query argument. Structured Streaming sizes its state
-    * store from `spark.sql.shuffle.partitions` at first run, and
-    * state-partition sizing is per-stream-load tuning (a fixture-sized
-    * stream pays one state-store commit per partition per operator per
-    * batch — measured ~1/3 of q77's wall at 32 vs 8), so it must not be
-    * expressed by mutating the shared session conf around the run: two
-    * concurrent stream launches on one session would race on the
-    * set/restore. Instead the query is BUILT AND RUN on a cloned session
-    * (`newSession` — same SparkContext, independent SQLConf and temp-view
-    * catalog), so the partition override is invisible to the caller's
-    * session and to any concurrent stream. `build` receives the clone and
-    * must construct its sources from it; the result re-enters the PARENT
-    * session as a local relation, so downstream batch ops see the
-    * caller's own conf. */
-  def runToMemoryIsolated(spark: SparkSession, statePartitions: Int,
-                          name: String, outputMode: String)
+  /** State partitions of every bounded replay ([[runToMemoryIsolated]]).
+    * A fixture-sized stream pays one state-store commit per partition per
+    * stateful operator per micro-batch, so a 32-core session's 32
+    * partitions of near-empty state are mostly commit overhead: measured
+    * ~1/3 of q77's wall at 32 vs 8, and ~20-30 % over ten replays. 8 -> 2
+    * cuts the commits but loses the wall (compute parallelism), so 8 is
+    * the measured optimum. Results do not depend on it: state is
+    * hash-partitioned on the same keys either way. */
+  private val StatePartitions = 8
+
+  /** [[runToMemory]] with [[StatePartitions]] state partitions. Structured
+    * Streaming sizes its state store from `spark.sql.shuffle.partitions`
+    * at first run, and that must not be set by mutating the shared session
+    * conf around the run: two concurrent stream launches on one session
+    * would race on the set/restore. Instead the query is BUILT AND RUN on
+    * a cloned session (`newSession` — same SparkContext, independent
+    * SQLConf and temp-view catalog), so the partition override is
+    * invisible to the caller's session and to any concurrent stream.
+    * `build` receives the clone and must construct its sources from it;
+    * the result re-enters the PARENT session as a local relation, so
+    * downstream batch ops see the caller's own conf. */
+  def runToMemoryIsolated(spark: SparkSession, name: String,
+                          outputMode: String)
                          (build: SparkSession => DataFrame): DataFrame = {
     val cloned = spark.newSession()
     cloned.conf.set("spark.sql.shuffle.partitions",
-      statePartitions.toString)
+      StatePartitions.toString)
     // one collect: the memory sink's rows re-enter the PARENT session
     // directly (the old path built a clone-session DataFrame and
     // collected it a second time to rebind)

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.llm.IvfIndex
+
 /** The q39 oracle dump must inline centroids only when they unambiguously
   * belong to the one probed dataset — a JVM that probed several sfDirs
   * must omit the entry (driver degrades to rows-only) rather than risk
@@ -9,24 +11,17 @@ import org.scalatest.funsuite.AnyFunSuite
 class SparkEntryOracleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("soleDigest: Some only for exactly one distinct digest") {
-    assert(SparkEntry.soleDigest(Nil) === None)
-    assert(SparkEntry.soleDigest(Seq("a")) === Some("a"))
-    assert(SparkEntry.soleDigest(Seq("a", "a")) === Some("a"))
-    assert(SparkEntry.soleDigest(Seq("a", "b")) === None)
-  }
-
   test("q39 oracle entry present for one probed dir, omitted once a second appears") {
-    val saved = SparkEntry.ivfDigestSnapshot
-    try {
-      // a real probe (plan build runs fit+persist+record eagerly)
-      SparkEntry.queries("q39_ivf_topk")(spark, "/root/testdata/sf0.001")
-      assert(SparkEntry.oracleSql.contains("q39_ivf_topk"),
-        "single-dir probe must dump the centroid twin")
-      // simulate a probe of a second dataset in the same JVM
-      SparkEntry.ivfDigestRecord("/some/other/sfdir", "not-a-real-digest")
-      assert(!SparkEntry.oracleSql.contains("q39_ivf_topk"),
-        "ambiguous multi-dir state must omit the twin, not guess")
-    } finally SparkEntry.ivfDigestRestore(saved)
+    // a real probe (plan build runs acquire+record eagerly)
+    SparkEntry.queries("q39_ivf_topk")(spark, "/root/testdata/sf0.001")
+    assert(SparkEntry.oracleSql.contains("q39_ivf_topk"),
+      "single-dir probe must dump the centroid twin")
+    // simulate a probe of a second dataset in the same JVM
+    val other = "/some/other/sfdir"
+    SparkEntry.ivfState.record(other, (IvfIndex.Model(Nil), other))
+    try assert(!SparkEntry.oracleSql.contains("q39_ivf_topk"),
+      "ambiguous multi-dir state must omit the twin, not guess")
+    finally SparkEntry.ivfState.forget(other)
+    assert(SparkEntry.oracleSql.contains("q39_ivf_topk"))
   }
 }

@@ -52,7 +52,10 @@ class JobsSpec extends AnyFunSuite {
     assert(byId(3L).isNullAt(silver.columns.indexOf("user_id")),
       "unmatched common key must leave user fields null")
 
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
     SilverToGold.run(spark, s"$root/silver", s"$root/gold", s"$root/model")
+    assert(spark.sparkContext.getPersistentRDDs.size === cachedBefore,
+      "the run must release the gold and fitted-vocabulary caches")
     val gold = spark.read.parquet(s"$root/gold")
     // na.drop across the keep-list drops row 3 (null user features)
     assert(gold.count() === 1)
@@ -60,7 +63,11 @@ class JobsSpec extends AnyFunSuite {
       gold.columns.contains("created") && gold.columns.contains("datetime"))
     assert(gold.select("user_id_raw").head().getInt(0) === 42)
     // retrieval split: the single gold row has click=1
-    assert(spark.read.parquet(s"$root/gold-retrieval").count() === 1)
+    val retrieval = spark.read.parquet(s"$root/gold-retrieval")
+    assert(retrieval.count() === 1)
+    // both sinks wrote ONE computation of gold: same load stamp
+    assert(retrieval.select("created").head().getTimestamp(0) ===
+      gold.select("created").head().getTimestamp(0))
 
     // stream transform applies the SAME persisted model (stream-batch
     // consistency): indices equal the batch gold table's

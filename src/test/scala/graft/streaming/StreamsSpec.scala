@@ -20,7 +20,7 @@ class StreamsSpec extends AnyFunSuite {
     implicit val sql = spark.sqlContext
     val mem = MemoryStream[(String, Long, String)]
     val df = mem.toDF().toDF("k", "ts", "v")
-    val q = Streams.latestPerKey(df, Seq("k"), "ts", "v")
+    val q = graft.ops.PointInTime.latestPerKey(df, Seq("k"), "ts", "v")
       .writeStream.format("memory").queryName("lpk_test")
       .outputMode("complete").start()
     // batch 1: newest value for u1 arrives FIRST
@@ -526,7 +526,7 @@ class StreamsSpec extends AnyFunSuite {
     val schema = spark.read.parquet(s"$dir/in").schema
     val stream = spark.readStream.schema(schema).parquet(s"$dir/in")
     val out = Streams.runToMemory(
-      Streams.latestPerKey(stream, Seq("k"), "ts", "v"),
+      graft.ops.PointInTime.latestPerKey(stream, Seq("k"), "ts", "v"),
       s"rtm_${System.nanoTime()}")
     assert(out.select("k", "v").as[(Long, String)].collect().toSet
       === Set((1L, "b"), (2L, "c")))
