@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.parse.{BpeApplyExpr, CountInExpr, DotProductExpr, FlacMetaExpr, IntDotExpr, IntersectCountExpr, JaccardExpr, L2SqExpr, Md5Lower64Expr, MediaMetaExpr, MinhashExpr, Mp4MetaExpr, MpegAudioMetaExpr, NfcExpr, OggMetaExpr, ParseKvExpr, PdfMetaExpr, ParseKvFieldsExpr, PqCodeExpr, RollingHashExpr, ShinglesExpr, SimhashExpr, TokensExpr, WebpMetaExpr}
 
@@ -39,11 +40,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("pq_code"),
       new ExpressionInfo(classOf[PqCodeExpr].getName, "pq_code"),
       (children: Seq[Expression]) => {
-        require(children.length == 2 && children(1).foldable,
+        require(children.length == 2 && children(1).foldable &&
+          (children(1).dataType match {
+            case ArrayType(ArrayType(DoubleType, _), _) => true
+            case _ => false
+          }),
           "pq_code(subvector, array(array(double)) codebook literal)")
         val arr = children(1).eval()
-        require(arr != null, "pq_code: codebook must not be NULL")
         val ad = arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        def noNulls(a: org.apache.spark.sql.catalyst.util.ArrayData) =
+          (0 until a.numElements()).forall(!a.isNullAt(_))
+        require(arr != null && noNulls(ad) &&
+          (0 until ad.numElements()).forall(c => noNulls(ad.getArray(c))),
+          "pq_code: codebook must not be NULL or hold a NULL row or value")
         val table = (0 until ad.numElements()).map { c =>
           val row = ad.getArray(c)
           (0 until row.numElements()).map(row.getDouble)

@@ -570,7 +570,14 @@ object Dedup {
     * half the corpus — `maxShingleDocFreq` drops windows above a
     * document-frequency cap before the join-back (the
     * [[removeContaminatedSpans]] guard; such windows are boilerplate for
-    * a boilerplate FILTER to handle, not span dedup). */
+    * a boilerplate FILTER to handle, not span dedup).
+    *
+    * Caching contract: the tokenized corpus is persisted
+    * (MEMORY_AND_DISK) and stays persisted after the returned frame is
+    * computed; this method never releases it. The caller releases it
+    * (`spark.catalog.clearCache()`, as Bench, Verify and Scaling do
+    * between queries) once it is done with the result, or every call
+    * leaves one more cached relation in the session. */
   def selfSubstringScrub(docs: DataFrame, docId: String, docText: String,
                          k: Int, maxShingleDocFreq: Option[Long] = None)
       : DataFrame = {
@@ -584,8 +591,7 @@ object Dedup {
     // and the final cleaned-text join) and tokenize is the query's most
     // expensive per-row expression — uncached, the scan + tokenize
     // re-execute per branch (3 scans in the recorded q112 plan; the
-    // q253 fingerprint-persist shape). Callers release via clearCache
-    // (the SparkEntry.queries caching contract).
+    // q253 fingerprint-persist shape). Released by the caller (scaladoc).
     val base = docs.select(col(docId).as("doc"),
       TextStats.tokens(lower(col(docText))).as("__t"))
       .repartition(col("doc"))

@@ -34,18 +34,18 @@ object SilverGold {
   /** The gold steps after the fit, shared by the batch job and the
     * stream that indexes with the batch-fitted model: raw-id copies,
     * indexing, the int cast battery and load timestamps (created = wall
-    * clock at load; datetime = event time when present, else load time). */
+    * clock at load; datetime = event time when present, else load time).
+    * The casts and stamps are one projection over the indexed plan. */
   def applyModel(kept: DataFrame, model: Categorify.Model,
                  rawCopy: Seq[String], index: Seq[String],
                  eventTime: String = null): DataFrame = {
-    val withRaw = rawCopy.foldLeft(kept)(
-      (df, c) => df.withColumn(s"${c}_raw", col(c)))
-    index.foldLeft(model.transform(withRaw))(
-      (df, c) => df.withColumn(c, col(c).cast("int")))
-      .withColumn("created", current_timestamp())
-      .withColumn("datetime",
-        if (eventTime == null) current_timestamp()
-        else to_timestamp(col(eventTime)))
+    val withRaw = kept.select(col("*") +: rawCopy.map(c => col(c).as(s"${c}_raw")): _*)
+    val indexed = model.transform(withRaw)
+    val now = current_timestamp()
+    indexed.select(indexed.columns.toSeq.map(c =>
+      if (index.contains(c)) col(c).cast("int").as(c) else col(c)) ++ Seq(
+      now.as("created"),
+      (if (eventTime == null) now else to_timestamp(col(eventTime))).as("datetime")): _*)
   }
 
   /** click==1 subset — the reference's `alicppretrieval` table (:171). */

@@ -78,6 +78,25 @@ class JobsSpec extends AnyFunSuite {
       gold.select("user_id").head().getInt(0))
   }
 
+  test("gold keeps its column names, order and types; one load stamp per row") {
+    val root = Files.createTempDirectory("jobs4").toString
+    val (sk, cm) = writeFixtures(root)
+    BronzeToSilver.run(spark, sk, cm, s"$root/silver")
+    SilverToGold.run(spark, s"$root/silver", s"$root/gold", s"$root/model")
+    val want = Aliccp.goldKeep.map(_ -> "int") ++ Seq("user_id_raw" -> "int",
+      "item_id_raw" -> "int", "created" -> "timestamp", "datetime" -> "timestamp")
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.toSeq.map(f => f.name -> f.dataType.simpleString)
+    val gold = spark.read.parquet(s"$root/gold")
+    assert(shape(gold) === want)
+    val row = gold.select("created", "datetime").head()
+    assert(row.getTimestamp(0) === row.getTimestamp(1))
+    // the stream's gold tail is the same applyModel
+    val model = Categorify.load(spark, s"$root/model", Aliccp.goldIndexCols)
+    assert(shape(StreamSilverToGold.transform(
+      spark.read.parquet(s"$root/silver"), model)) === want)
+  }
+
   test("CorpusClean filters, exact-dedups and collapses near-dup groups") {
     import spark.implicits._
     val root = Files.createTempDirectory("jobs3").toString

@@ -96,6 +96,27 @@ class CategorifySpec extends AnyFunSuite {
       === hinted.collect().map(_.getLong(0)).sorted.toSeq)
   }
 
+  /** Spark jobs `f` starts on this thread, counted by a listener with the
+    * bus drained before and after. */
+  private def jobsRun(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"catg-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "categorify job count")
+    try { f; org.apache.spark.TestBus.drain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+    n.get
+  }
+
+  private def tmpDir() = java.nio.file.Files.createTempDirectory("catg").toString
+
   test("save/load round-trip") {
     val dir = java.nio.file.Files.createTempDirectory("catg").toString
     val df = Seq("a", "b", "b").toDF("v")
@@ -104,5 +125,72 @@ class CategorifySpec extends AnyFunSuite {
     assert(loaded.sizes("v") === 2L)
     val out = loaded.transform(Seq("b").toDF("v")).select("v").as[Long].head()
     assert(out === 0L)
+  }
+
+  test("save of a 3-column model is one Spark job; load runs none") {
+    val df = Seq(("a", "x", "p"), ("b", "x", "q"), ("b", "y", "q")).toDF("u", "v", "w")
+    val model = Categorify.fit(df, Seq("u", "v", "w"))
+    val dir = tmpDir()
+    assert(jobsRun(model.save(dir)) === 1)
+    var loaded: Categorify.Model = null
+    assert(jobsRun { loaded = Categorify.load(spark, dir, Seq("u", "v", "w")) } === 0)
+    assert(loaded.sizes === model.sizes)
+    Seq("u", "v", "w").foreach { c =>
+      assert(loaded.lookups(c).as[(String, Long)].collect().toMap ===
+        model.lookups(c).as[(String, Long)].collect().toMap, c)
+    }
+    // a loaded model (no fitted table) saves the same vocabularies
+    val again = tmpDir()
+    loaded.save(again)
+    assert(Categorify.load(spark, again, Seq("u", "v", "w")).lookups("u")
+      .as[(String, Long)].collect().toMap === Map("b" -> 0L, "a" -> 1L))
+    model.unpersist()
+  }
+
+  test("an all-NULL column round-trips as an empty vocabulary") {
+    val df = Seq[(String, Option[String])](("a", None), ("b", None)).toDF("v", "n")
+    val dir = tmpDir()
+    Categorify.fit(df, Seq("v", "n")).save(dir)
+    val loaded = Categorify.load(spark, dir, Seq("v", "n"))
+    assert(loaded.sizes === Map("v" -> 2L, "n" -> 0L))
+    assert(loaded.lookups("n").schema.toDDL === "value STRING,idx BIGINT")
+    assert(loaded.lookups("n").count() === 0L)
+    // every value is unseen: index = size = 0
+    assert(loaded.transform(Seq(("a", "z")).toDF("v", "n")).select("n")
+      .as[Long].collect().toSeq === Seq(0L))
+  }
+
+  test("column names that partition paths escape round-trip") {
+    val df = Seq(("a", "x"), ("a", "y"), ("b", "y")).toDF("a b", "k=v%")
+    val model = Categorify.fit(df, Seq("a b", "k=v%"))
+    val dir = tmpDir()
+    model.save(dir)
+    val loaded = Categorify.load(spark, dir, Seq("a b", "k=v%"))
+    assert(loaded.sizes === model.sizes)
+    Seq("a b", "k=v%").foreach { c =>
+      assert(new java.io.File(s"$dir/$c").isDirectory, c)
+      assert(loaded.lookups(c).as[(String, Long)].collect().toMap ===
+        model.lookups(c).as[(String, Long)].collect().toMap, c)
+    }
+  }
+
+  test("saving over another model leaves exactly the new model's columns") {
+    val dir = tmpDir()
+    Categorify.fit(Seq(("a", "b")).toDF("x", "y"), Seq("x", "y")).save(dir)
+    Categorify.fit(Seq("c", "d").toDF("z"), Seq("z")).save(dir)
+    val visible = new java.io.File(dir).list().filterNot(_.startsWith("_"))
+      .filterNot(_.startsWith(".")).toSet
+    assert(visible === Set("z"))
+    assert(Categorify.load(spark, dir, Seq("z")).sizes === Map("z" -> 2L))
+    val e = intercept[NoSuchElementException](Categorify.load(spark, dir, Seq("x")))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("x"))
+  }
+
+  test("load without the sizes sidecar fails naming the path") {
+    val dir = tmpDir()
+    Categorify.fit(Seq("a").toDF("v"), Seq("v")).save(dir)
+    assert(new java.io.File(s"$dir/_sizes").delete())
+    val e = intercept[java.io.FileNotFoundException](Categorify.load(spark, dir, Seq("v")))
+    assert(e.getMessage.contains(dir), e.getMessage)
   }
 }

@@ -67,6 +67,31 @@ class VectorExprsSpec extends AnyFunSuite {
     assert(bad.collect().head.isNullAt(0))
   }
 
+  /** The message a misused pq_code call fails with (the function's require
+    * may surface wrapped in an analysis error). */
+  private def pqCodeError(codebook: org.apache.spark.sql.Column): String = {
+    val e = intercept[Exception](Seq(Tuple1(Seq(1.0, 2.0))).toDF("sub")
+      .select(call_function("pq_code", col("sub"), codebook)).collect())
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).find(_.contains("pq_code"))
+      .getOrElse(fail(s"no pq_code message in $e"))
+  }
+
+  test("pq_code rejects a codebook that is not array<array<double>>") {
+    val typeMsg = "pq_code(subvector, array(array(double)) codebook literal)"
+    assert(pqCodeError(typedLit(Seq(Seq(1.0f, 2.0f)))).contains(typeMsg))
+    assert(pqCodeError(typedLit(Seq(Seq(1, 2)))).contains(typeMsg))
+    assert(pqCodeError(typedLit(Seq(1.0, 2.0))).contains(typeMsg))
+  }
+
+  test("pq_code rejects a NULL codebook, a NULL row and a NULL value") {
+    val nullMsg = "pq_code: codebook must not be NULL"
+    assert(pqCodeError(lit(null).cast("array<array<double>>")).contains(nullMsg))
+    assert(pqCodeError(typedLit(Seq(Seq(1.0, 2.0), null))).contains(nullMsg))
+    assert(pqCodeError(typedLit(Seq(Seq[java.lang.Double](1.0, null))))
+      .contains(nullMsg))
+  }
+
   test("vec_dot handles mixed float/double arrays (hyperplane path)") {
     val out = Seq((Seq(1f, 2f), Seq(0.5, 0.25))).toDF("v", "p")
       .select(call_function("vec_dot", col("v"), col("p"))).as[Double].head()
