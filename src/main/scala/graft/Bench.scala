@@ -1,12 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{count, lit}
 
 /** Headline benchmark — one JSON line on stdout, full per-query detail in
   * BENCH_DETAIL.json.
   *
   * Measurement protocol (round 15): queries run in CHUNKS of
-  * `SPARK_GRAFT_CHUNK` (default 48), each chunk in a FRESH SparkSession
+  * [[ChunkSize]], each chunk in a FRESH SparkSession
   * with both of its min-of-2 passes back-to-back. Round 14's closing
   * artifact showed why: with two whole-suite passes in one session, pass
   * 2 — the pass that usually supplies the min — starts after 284+
@@ -29,18 +28,15 @@ import org.apache.spark.sql.functions.{count, lit}
   * while the r13-vs-r14 comparison exited 1).
   */
 object Bench {
+  /** Queries per fresh-session chunk. */
+  val ChunkSize = 48
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = GraftSession.cpus
 
     def mkSession(): SparkSession = {
-      val spark = GraftSession.tune(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.local(cpus, cpus)
       // Warmup outside the timed loop: the first measured query otherwise
       // absorbs one-time costs that are not its own — JIT of the task
       // loop, the parquet footer/codec machinery, whole-stage-codegen
@@ -62,58 +58,20 @@ object Bench {
       spark
     }
 
-    val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "300").toLong
-    // optional comma-separated subset filter for targeted profiling
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // queries per fresh-session chunk (0 disables chunking: one session
-    // for everything — the pre-round-15 behavior, kept for A/B profiling)
-    val chunkSize = sys.env.getOrElse("SPARK_GRAFT_CHUNK", "48").toInt
-    // per-query output row counts (plausibility audit alongside timings).
-    // Concurrent map: a timed-out query's orphaned future may still write
-    // its count while the main thread reads for the final report.
-    val rowCounts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    def onePass(spark: SparkSession,
-                qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]): Seq[(String, Double)] =
+    // per-query output row counts (plausibility audit alongside timings),
+    // and the queries that ran beside a leaked timed-out one
+    val rowCounts = scala.collection.mutable.Map.empty[String, Long]
+    val tainted = scala.collection.mutable.Set.empty[String]
+    def onePass(runner: QueryRunner, qs: Seq[(String, QueryRunner.Query)]): Seq[(String, Double)] =
       qs.map { case (name, fn) =>
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration._
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val t0 = System.nanoTime()
-        // noop sink: materializes every output row through the normal action
-        // path (SQLExecution.withSQLConfPropagated — raw toRdd would drop
-        // session SQL confs on executor threads; a bare .count() would let
-        // Catalyst prune the query to a row-count shortcut). An Observation
-        // (CollectMetrics node) counts output rows inline — no second job.
-        // Watchdog per query: a hang must not stall the whole bench.
-        val f = Future {
-          spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-          val obs = org.apache.spark.sql.Observation()
-          try {
-            fn(spark, sfDir).observe(obs, count(lit(1)).as("n"))
-              .write.format("noop").mode("overwrite").save()
-            rowCounts.put(name, obs.get("n").asInstanceOf[Long])
-          } finally spark.sparkContext.clearJobGroup()
-        }
-        try Await.result(f, timeoutSec.seconds)
-        catch {
-          case _: java.util.concurrent.TimeoutException =>
-            spark.sparkContext.cancelJobGroup(name)
-            System.err.println(s"[bench] $name TIMED OUT after ${timeoutSec}s")
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val o = runner.run(name)(QueryRunner.noopRows(fn(runner.spark, sfDir)))
+        o.result.foreach(rowCounts(name) = _)
+        if (o.tainted) tainted += name
         // per-pass raw timing on stderr: the reported min-of-2 hides
         // which pass was slow, which is the first question when a query's
         // in-suite number diverges from its isolated number
-        System.err.println(f"[bench] pass $name%-22s ${dt}%.3f s")
-        // Untimed inter-query hygiene: operators cache intermediates that
-        // stay referenced by the CacheManager after the query completes;
-        // accumulated across a chunk they GC-thrash whatever runs next
-        // (q29 measured 12.4s dirty vs 1.4s clean, round 3). Also keeps
-        // each query's measurement independent of its neighbors.
-        spark.catalog.clearCache()
-        name -> dt
+        System.err.println(f"[bench] pass $name%-22s ${o.seconds}%.3f s")
+        name -> o.seconds
       }
     // two passes per chunk, report per-query min: the chunk's first pass
     // pays residual JIT/codegen warmup; min-of-2 is the steady-state
@@ -121,37 +79,21 @@ object Bench {
     // the chunk's OWN fresh session, then the session stops — codegen
     // classloaders, shuffle dirs, broadcast and localCheckpoint blocks
     // all release deterministically before the next chunk measures.
-    // Session teardown: stop the JVM-global state-store machinery BEFORE
-    // the SparkContext. The maintenance pool is not tied to the context —
-    // providers loaded by finished streaming replays keep pinging the
-    // StateStoreCoordinator on their 60s cadence, and once the chunk's
-    // context stops those pings surface as transient
-    // RpcEndpointNotFoundException retries in the bench tail (round-17
-    // driver log), polluting whatever runs next. stop() unloads the
-    // providers and parks the pool; the next session's first stateful
-    // query lazily restarts it. Runs BETWEEN chunks — never inside a
-    // timed query.
-    def stopSession(spark: SparkSession): Unit = {
-      try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      catch { case e: Exception =>
-        System.err.println(s"[bench] state-store stop skipped: ${e.getMessage}") }
-      spark.stop()
+    def minOfTwo(qs: Seq[(String, QueryRunner.Query)]): Seq[(String, Double)] = {
+      val spark = mkSession()
+      try {
+        val runner = new QueryRunner(spark, "bench")
+        val r1 = onePass(runner, qs).toMap
+        // let ContextCleaner reclaim localCheckpoint blocks before pass 2
+        System.gc()
+        onePass(runner, qs).map { case (n, t) => n -> math.min(t, r1(n)) }
+      } finally GraftSession.stop(spark)
     }
-    def minOfTwoChunked(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]): Seq[(String, Double)] = {
-      val groups = if (chunkSize <= 0) Seq(qs)
-        else qs.grouped(chunkSize).toSeq
-      groups.flatMap { chunk =>
-        val spark = mkSession()
-        try {
-          val r1 = onePass(spark, chunk).toMap
-          // let ContextCleaner reclaim localCheckpoint blocks before pass 2
-          System.gc()
-          onePass(spark, chunk).map { case (n, t) => n -> math.min(t, r1(n)) }
-        } finally stopSession(spark)
-      }
-    }
-    val headline = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    def minOfTwoChunked(qs: Seq[(String, QueryRunner.Query)]): Seq[(String, Double)] =
+      qs.grouped(ChunkSize).toSeq.flatMap(minOfTwo)
+    val (headline, variants) = QueryRunner.resolve(QueryRunner.only,
+        SparkEntry.queries ++ SparkEntry.prodVariants)
+      .sortBy(_._1).partition { case (n, _) => SparkEntry.queries.contains(n) }
     // Isolated confirmation pass (the round-14 adjudication, automated):
     // a query can measure 2-3x its true steady-state time purely from
     // in-suite neighbors (GC pressure from a literal-heavy plan two
@@ -217,9 +159,9 @@ object Bench {
     // This closes the round-15 process gap where the confirmation ran
     // but the artifact carried only in-suite numbers, forcing a human
     // to rerun the tripping queries by hand.
-    val confirmedIso = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+    val confirmedIso = scala.collection.mutable.Map.empty[String, Double]
     def confirmIsolated(measured: Seq[(String, Double)],
-                        pool: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]): Seq[(String, Double)] = {
+                        pool: Map[String, QueryRunner.Query]): Seq[(String, Double)] = {
       val prior = loadPriorBaseline().getOrElse(return measured)
       val shared = measured.filter { case (n, _) => prior.contains(n) }
       val ratios = shared.collect { case (n, t) if prior(n) > 0.05 && t > 0 =>
@@ -235,18 +177,12 @@ object Bench {
       System.err.println(s"[bench] isolated confirmation for " +
         s"${flagged.size} flagged quer${if (flagged.size == 1) "y" else "ies"}: " +
         flagged.mkString(", "))
-      val qs = flagged.map(n => n -> pool(n))
-      val spark = mkSession()
-      val fresh = try {
-        val f1 = onePass(spark, qs).toMap
-        System.gc()
-        onePass(spark, qs).map { case (n, t) => n -> math.min(t, f1(n)) }.toMap
-      } finally stopSession(spark)
+      val fresh = minOfTwo(flagged.map(n => n -> pool(n))).toMap
       // record EVERY isolated number, kept or not — the gate's
       // adjudication data must include the case where isolated is
       // slower (a real regression), or the artifact only ever tells
       // the exculpatory half of the story
-      fresh.foreach { case (n, ft) => confirmedIso.put(n, ft) }
+      confirmedIso ++= fresh
       measured.map { case (n, t) =>
         fresh.get(n) match {
           case Some(ft) if ft < t =>
@@ -263,8 +199,6 @@ object Bench {
     // verified queries AND sum("queries") == "value" stays true in the
     // detail file too (a consumer cross-checking the invariant must not
     // trip over variant entries)
-    val variants = SparkEntry.prodVariants.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     val prod = confirmIsolated(minOfTwoChunked(variants), variants.toMap)
     // 2 decimals in the compact line: at 69+ queries a 3-decimal map
     // outgrows the harness's 2000-char tail capture (measured 1737 chars
@@ -292,10 +226,11 @@ object Bench {
       else s"""{"metric":"total","value":$roundedTotal,"unit":"sec","queries":"see BENCH_DETAIL.json","sf":"$sfDir"}"""
     val detail = {
       def entries(xs: Seq[(String, Double)]): String =
-        xs.map { case (k, v) => s"""  "$k": {"sec": $v, "rows": ${rowCounts.getOrDefault(k, -1L)}}""" }
-          .mkString("{\n", ",\n", "\n}")
-      import scala.jdk.CollectionConverters._
-      val confirmed = confirmedIso.asScala.toSeq.sortBy(_._1)
+        xs.map { case (k, v) =>
+          val taint = if (tainted(k)) """, "tainted": true""" else ""
+          s"""  "$k": {"sec": $v, "rows": ${rowCounts.getOrElse(k, -1L)}$taint}"""
+        }.mkString("{\n", ",\n", "\n}")
+      val confirmed = confirmedIso.toSeq.sortBy(_._1)
         .map { case (k, v) => s"""  "$k": {"sec": $v}""" }
         .mkString("{\n", ",\n", "\n}")
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +

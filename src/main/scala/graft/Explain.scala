@@ -1,29 +1,31 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps each query's formatted physical plan to PLANS.md — the
   * scale-posture audit trail: verify pushed filters reach the scans, small
-  * dims broadcast, and WholeStageCodegen spans stay wide. */
+  * dims broadcast, and WholeStageCodegen spans stay wide.
+  *
+  * Usage: runMain graft.Explain [sfDir] [outFile] [q1,q2,...] — the names
+  * limit the dump to those queries. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = GraftSession.local(cores = 8, shufflePartitions = 8)
-    val sb = new StringBuilder
-    sb.append("# Physical plans (generated by graft.Explain at ")
-      .append(sfDir).append(")\n")
     // bench-only production twins ride the same dump (round 17): the
     // scale-audit table and the per-query plan record must cover what
     // the bench actually times, not just the oracle-checked set
-    val plans = (SparkEntry.queries.toSeq ++ SparkEntry.prodVariants.toSeq)
-      .sortBy(_._1).map { case (name, fn) =>
-        val plan =
-          try fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
-        name -> plan
-      }
+    val queries = QueryRunner.resolve(args.lift(2).map(_.split(",").toSeq),
+      SparkEntry.queries ++ SparkEntry.prodVariants).sortBy(_._1)
+    val spark = GraftSession.local(cores = 8, shufflePartitions = 8)
+    val runner = new QueryRunner(spark, "explain")
+    val sb = new StringBuilder
+    sb.append("# Physical plans (generated by graft.Explain at ")
+      .append(sfDir).append(")\n")
+    val plans = queries.map { case (name, fn) =>
+      val o = runner.run(name)(fn(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
+      name -> o.result.fold(e => s"ERROR: ${e.getMessage}", identity)
+    }
     // Scale-audit summary: shuffle counts, join strategies, codegen spans,
     // scan-level filter pushdown — the checklist a plan review walks.
     // one "(N) Op" detail header per operator in formatted mode
@@ -43,6 +45,6 @@ object Explain {
       sb.append(s"\n## $name\n\n```\n").append(plan).append("\n```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Configs applied to any session, including ones created externally
-    * (Verify/Bench own their builder; they call [[tune]]). */
+    * (the perfbench harness owns its builder; it calls [[tune]]). */
   def tune(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.extensions", "graft.ext.GraftExtensions")
     .config("spark.sql.session.timeZone", "UTC")
@@ -64,6 +64,11 @@ object GraftSession {
     .config("spark.ui.retainedTasks", "2000")
     .config("spark.ui.retainedDeadExecutors", "10")
 
+  /** Cores for a harness session: `SPARK_GRAFT_CPUS`, else the available
+    * processors. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
     val s = tune(
       SparkSession.builder()
@@ -74,5 +79,20 @@ object GraftSession {
     ).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Stop `spark`, the JVM-global state-store machinery first. Its
+    * maintenance pool is not tied to the context: providers loaded by
+    * finished streaming replays keep pinging the StateStoreCoordinator on
+    * their 60s cadence, and once the context stops those pings surface as
+    * RpcEndpointNotFoundException retries in whatever runs next (seen in
+    * the bench tail between chunk sessions). `StateStore.stop()` unloads
+    * the providers and parks the pool; the next session's first stateful
+    * query restarts it. */
+  def stop(spark: SparkSession): Unit = {
+    try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    catch { case e: Exception =>
+      System.err.println(s"[graft] state-store stop skipped: ${e.getMessage}") }
+    spark.stop()
   }
 }

@@ -22,14 +22,8 @@ object Scaling {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 10
     val out = if (args.length > 2) args(2) else "/tmp/graft_scale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus, cpus)
 
     // Conf toggle that RESTORES the prior value (not unset) — a plain
     // unset in a finally clobbers any operator-set gate on the shared
@@ -52,7 +46,7 @@ object Scaling {
         col("ts"), (col("user_id") + lit(i * 10000000L)).as("user_id"),
         col("event_type"), col("value"), col("props"))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
     val d = spark.read.parquet(s"$src/documents.parquet")
     val alphabet = "abcdefghijklmnopqrstuvwxyz"
@@ -76,7 +70,7 @@ object Scaling {
         translate(col("text"), alphabet, shuffled).as("text"),
         col("lang"), col("source"), col("n_chars"))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
     val emb = spark.read.parquet(s"$src/embeddings.parquet")
     (0 until factor).map { i =>
@@ -92,7 +86,7 @@ object Scaling {
       emb.select((col("vec_id") + lit(10000000L * i)).as("vec_id"),
         array(perm.map(j => col("embedding").getItem(j)): _*).as("embedding"))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     // factor× lineitem with fresh order AND part keys: the part catalog
     // grows with the data (the q207 Pareto frame is per-part — weak
@@ -109,7 +103,7 @@ object Scaling {
         col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
         col("o_orderpriority"))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$out/orders.parquet")
     val li = spark.read.parquet(s"$src/lineitem.parquet")
     (0 until factor).map { i =>
@@ -119,7 +113,7 @@ object Scaling {
         col("l_extendedprice"), col("l_discount"), col("l_tax"),
         col("l_returnflag"), col("l_linestatus"), col("l_shipdate"))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
 
     // ---- the heavy operator paths --------------------------------------
@@ -1067,19 +1061,17 @@ object Scaling {
     val only = sys.env.get("SPARK_GRAFT_OPS").map(_.split(",").toSet)
     val ops = all.filter { case (n, _) => only.forall(_.contains(n)) }
 
+    // rows come back -1 when the runner reports the run failed or timed out
+    val runner = new QueryRunner(spark, "scaling")
     def time(fn: => DataFrame): (Double, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val t0 = System.nanoTime()
-      fn.observe(obs, count(lit(1)).as("n"))
-        .write.format("noop").mode("overwrite").save()
-      ((System.nanoTime() - t0) / 1e9, obs.get("n").asInstanceOf[Long])
+      val o = runner.run("scaling")(QueryRunner.noopRows(fn))
+      (o.seconds, o.result.getOrElse(-1L))
     }
 
     val results = ops.map { case (name, fn) =>
       val _ = time(fn(src)) // warm codegen/JIT on the small scale
       val (t1, n1) = time(fn(src))
       val (tN, nN) = time(fn(out))
-      spark.catalog.clearCache()
       (name, t1, n1, tN, nN)
     }
     println("op,base_sec,base_rows,scaled_sec,scaled_rows,time_ratio")
@@ -1133,7 +1125,6 @@ object Scaling {
       val (t1, n1) = pairsOp(src, 8)
       val (tF, nF) = pairsOp(out, 8)  // fixed planes: buckets densify
       val (tS, nS) = pairsOp(out, 8 + (math.log(factor) / math.log(2)).ceil.toInt)
-      spark.catalog.clearCache()
       println("op,base_sec,base_pairs,scaled_sec,scaled_pairs,time_ratio")
       println(f"semantic_dup_fixed_planes,$t1%.2f,$n1,$tF%.2f,$nF,${tF / t1}%.1f")
       println(f"semantic_dup_scaled_planes,$t1%.2f,$n1,$tS%.2f,$nS,${tS / t1}%.1f")
@@ -1452,7 +1443,7 @@ object Scaling {
         spark.range(n).select(col("id").as("doc_id"),
             lit("s0").as("source"),
             (pmod(hash(col("id")), lit(400)) + 1).cast("long").as("n_tokens"))
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode("overwrite").parquet(path)
         path
       }
@@ -1466,10 +1457,8 @@ object Scaling {
       val _ = packOp(basePath, dist = true) // warm codegen/JIT
       val (tw1, nw1) = packOp(basePath, dist = false)
       val (twN, _) = packOp(scaledPath, dist = false)
-      spark.catalog.clearCache()
       val (td1, _) = packOp(basePath, dist = true)
       val (tdN, _) = packOp(scaledPath, dist = true)
-      spark.catalog.clearCache()
       println("op,base_sec,base_rows,scaled_sec,time_ratio")
       println(f"pack_windowed,$tw1%.2f,$nw1,$twN%.2f,${twN / tw1}%.1f")
       println(f"pack_distributed,$td1%.2f,$nw1,$tdN%.2f,${tdN / td1}%.1f")
@@ -1496,7 +1485,9 @@ object Scaling {
       val alpha = "abcdefghijklmnopqrstuvwxyz"
       val freshPerm = new scala.util.Random(777777)
         .shuffle(alpha.toList).mkString
-      val batch = baseDocs.filter(col("doc_id") % 5 === 1).limit(800)
+      // written once rather than cached: every timed run clears the cache
+      val batchPath = s"$out/incr_batch.parquet"
+      baseDocs.filter(col("doc_id") % 5 === 1).limit(800)
         .select((col("doc_id") + 900000000L).as("doc_id"),
           translate(col("text"), alpha, freshPerm).as("text"))
         .unionByName(baseDocs.filter(col("doc_id") % 50 === 2).limit(100)
@@ -1504,7 +1495,8 @@ object Scaling {
         .unionByName(baseDocs.filter(col("doc_id") % 50 === 3).limit(100)
           .select((col("doc_id") + 920000000L).as("doc_id"),
             concat(col("text"), lit(" appended salt token")).as("text")))
-        .repartition(cpus.toInt).cache()
+        .repartition(cpus).write.mode("overwrite").parquet(batchPath)
+      val batch = spark.read.parquet(batchPath)
       val nB = batch.count()
       def buildAt(docs: DataFrame, path: String): Double = {
         val t0 = System.nanoTime()
@@ -1523,12 +1515,8 @@ object Scaling {
       val _ = admitAt(p1) // warm codegen/JIT
       val (ta1, _) = admitAt(p1)
       val (taN, _) = admitAt(pN)
-      def full(docs: DataFrame): (Double, Long) = {
-        val r = time(Dedup.minhashLsh(docs.unionByName(batch),
-          "doc_id", "text"))
-        spark.catalog.clearCache() // minhashLsh caches its signature frame
-        r
-      }
+      def full(docs: DataFrame): (Double, Long) =
+        time(Dedup.minhashLsh(docs.unionByName(batch), "doc_id", "text"))
       val _ = full(baseDocs.limit(1000)) // warm
       val (tf1, _) = full(baseDocs)
       val (tfN, _) = full(scaledDocs)
@@ -1536,7 +1524,6 @@ object Scaling {
       println(f"incr_build,$nB,$tb1%.2f,$tbN%.2f,${tbN / tb1}%.1f")
       println(f"incr_admit,$nB,$ta1%.2f,$taN%.2f,${taN / ta1}%.1f")
       println(f"full_rededup,$nB,$tf1%.2f,$tfN%.2f,${tfN / tf1}%.1f")
-      batch.unpersist()
     }
 
     // ---- the composed CorpusClean job, both candidate modes ------------
@@ -1566,6 +1553,6 @@ object Scaling {
         println(f"corpus_clean_$mode,$t1%.2f,${s1.kept}/${s1.input},$tN%.2f,${sN.kept}/${sN.input},${tN / t1}%.1f")
       }
     }
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

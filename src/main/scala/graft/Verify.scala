@@ -1,53 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    require(args.length == 2, "usage: graft.Verify <sfDir> <outDir>")
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = QueryRunner.resolve(QueryRunner.only, SparkEntry.queries)
+    val spark = GraftSession.local(GraftSession.cpus, GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
-    val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "300").toLong
-    // optional comma-separated subset filter for targeted iteration
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-      // per-query watchdog: one hung query must not zero the whole round.
-      // The query runs tagged with a job group so timeout cancels its jobs.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration._
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val f = Future {
-        spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        finally spark.sparkContext.clearJobGroup()
-      }
-      try Await.result(f, timeoutSec.seconds)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          spark.sparkContext.cancelJobGroup(name)
-          System.err.println(s"[verify] $name TIMED OUT after ${timeoutSec}s")
-        case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // inter-query hygiene (Bench's discipline): queries persist()
-      // intermediates that the CacheManager keeps referenced after the
-      // query completes; across 200+ queries the accumulation
-      // GC-thrashes the tail of the run
-      spark.catalog.clearCache()
+    val runner = new QueryRunner(spark, "verify")
+    queries.foreach { case (name, fn) =>
+      runner.run(name)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
     }
     val json = OracleManifest.renderSqlJson(SparkEntry.oracleSql)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -509,19 +509,6 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) {
-      val ps = q.recentProgress
-      import scala.jdk.CollectionConverters._
-      System.err.println(s"[stream-debug] $name batches=${ps.length} " +
-        ps.map { p =>
-          val d = p.durationMs.asScala.toSeq.sortBy(-_._2)
-            .map { case (k, v) => s"$k=$v" }.mkString(",")
-          val so = p.stateOperators.map(o =>
-            s"${o.operatorName}:commit=${o.commitTimeMs}ms,rows=${o.numRowsTotal}")
-            .mkString(";")
-          s"b${p.batchId}[rows=${p.numInputRows},src=${p.sources.length}]{$d}{$so}"
-        }.mkString(" "))
-    }
     // The memory sink's table is fully materialized on the driver already;
     // take its rows and DROP the temp view before returning. Callers use
     // throwaway query names (q23/q63/q71 suffix nanoTime), so leaving the
