@@ -1,7 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -115,10 +118,11 @@ object Similarity {
     * time (assignment happened once, at build). Identical output to
     * [[ivfTopK]] on the same corpus/index (SimilaritySpec asserts it).
     *
-    * The probed-cell set collects to the driver to drive the pruning
-    * filter — bounded by nlist by construction, so this is driver-sized
-    * regardless of query-batch size (and eager: calling this runs one tiny
-    * job over the query batch). */
+    * The probed-cell set is taken on the driver and names the cell dirs
+    * the scan reads — bounded by nlist by construction, so this is
+    * driver-sized regardless of query-batch size. A local query batch
+    * (a `LocalRelation`) is routed while the plan is optimized, with no
+    * Spark job; any other batch runs one job to collect its cells. */
   def ivfTopKPersisted(queries: DataFrame, cellsPath: String, k: Int,
                        index: IvfIndex.Model, nprobe: Int): DataFrame = {
     val (queryCells, corpusCells) =
@@ -127,18 +131,57 @@ object Similarity {
   }
 
   /** The persisted probe's two sides: each query exploded to its
-    * `nprobe` best cells, and the inverted file's scan pruned to the
-    * cells some query probes (collected eagerly — one tiny job). */
+    * `nprobe` best cells, and the inverted file's scan of only the cells
+    * some query probes. A local batch's cells are computed by the
+    * folded projection (no job); any other batch's are exploded and
+    * collected distinct, one job whose result stays nlist-bounded. */
   private def ivfProbePersisted(queries: DataFrame, cellsPath: String,
                                 index: IvfIndex.Model,
                                 nprobe: Int): (DataFrame, DataFrame) = {
-    val queryCells = queries.withColumn("cell",
-      explode(ivfProbeCells(col("qvec"), index, nprobe)))
-    val probed = queryCells.select("cell").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val corpusCells = queries.sparkSession.read.parquet(cellsPath)
-      .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
-    (queryCells, corpusCells)
+    val probes = ivfProbeCells(col("qvec"), index, nprobe)
+    val queryCells = queries.withColumn("cell", explode(probes))
+    val probed =
+      if (queries.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+        queries.select(probes).collect().flatMap(_.getSeq[Int](0)).toSet
+      else queryCells.select("cell").distinct().collect().map(_.getInt(0)).toSet
+    (queryCells, readCells(queries.sparkSession, cellsPath, probed))
+  }
+
+  /** Each session's inverted-file schemas by cells path, with the root
+    * dir's modification time each was read at. */
+  private val cellsSchemas =
+    new java.util.WeakHashMap[SparkSession, java.util.Map[String, (Long, StructType)]]()
+
+  /** The inverted file's schema, inferred once per session and root
+    * modification time (a rebuild or append rewrites the root). */
+  private def cellsSchema(spark: SparkSession, root: String,
+                          mtime: Long): StructType = {
+    val bySession = cellsSchemas.synchronized(cellsSchemas.computeIfAbsent(
+      spark, _ => new java.util.concurrent.ConcurrentHashMap()))
+    Option(bySession.get(root)).collect { case (`mtime`, s) => s }.getOrElse {
+      val s = spark.read.parquet(root).schema
+      bySession.put(root, (mtime, s))
+      s
+    }
+  }
+
+  /** The inverted file's rows in the `probed` cells: a scan of only their
+    * `cell=<i>` dirs, the probed cells entering as paths, not as a
+    * per-call literal list the plan would compile. A cell no vector was
+    * assigned to has no dir and contributes no rows. */
+  private def readCells(spark: SparkSession, cellsPath: String,
+                        probed: Set[Int]): DataFrame = {
+    val root = new Path(cellsPath)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val names = probed.map(c => s"cell=$c")
+    val dirs = fs.listStatus(root).toSeq
+      .filter(st => st.isDirectory && names(st.getPath.getName))
+      .map(_.getPath.toString).sorted
+    val schema = cellsSchema(spark, cellsPath,
+      fs.getFileStatus(root).getModificationTime)
+    if (dirs.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", cellsPath).parquet(dirs: _*)
   }
 
   /** BUDGETED probe of a persisted inverted file, with a truncation

@@ -45,7 +45,9 @@ object FeatureStore {
     * key set is small by construction (a serving batch), so it broadcasts —
     * the online table is never shuffled, and on a BUCKETED snapshot
     * (Streams.upsertOnline's layout) only the gen dirs the keys hash
-    * into are scanned at all ([[OnlineTable.lookup]]). */
+    * into are scanned at all ([[OnlineTable.lookup]]). A local key set is
+    * routed to its buckets on the driver, and the manifest carries the
+    * snapshot's schema, so building the lookup runs no Spark job. */
   def getOnlineFeatures(spark: SparkSession, path: String,
                         view: FeatureView, keys: DataFrame): DataFrame =
     OnlineTable.lookup(spark, path, view.entities, keys)

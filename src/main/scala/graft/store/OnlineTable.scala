@@ -1,9 +1,10 @@
 package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, xxhash64}
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType,
+  LongType, MapType, ShortType, StructType}
 
 /** Versioned online-table layout with an optimistic-concurrency commit
   * log — the object-store-safe replacement for directory-rename swaps
@@ -95,26 +96,46 @@ object OnlineTable {
     v
   }
 
-  /** Retained commit-log entries, seq-ascending. */
-  private def logEntries(fs: FileSystem, rootPath: Path): Seq[(Long, String)] = {
-    val dir = new Path(rootPath, CommitDir)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("c-"))
-      .flatMap { st =>
-        // a concurrent publisher's GC may collect a stale commit file
-        // between our listing and the read — a vanished entry is simply
-        // no longer part of the retained log
-        try Some((st.getPath.getName.stripPrefix("c-").toLong,
-          readCommit(fs, st.getPath)))
-        catch { case _: java.io.FileNotFoundException => None }
-      }
-      .sortBy(_._1)
-  }
+  private def commitPath(rootPath: Path, seq: Long): Path =
+    new Path(new Path(rootPath, CommitDir), f"c-$seq%012d")
 
-  /** Log head (seq, version), if the table has ever been published. */
-  private def head(fs: FileSystem, rootPath: Path): Option[(Long, String)] =
-    logEntries(fs, rootPath).lastOption
+  /** Seqs of the commit files in the log, unordered; none before the
+    * first commit. */
+  private def commitSeqs(fs: FileSystem, rootPath: Path): Seq[Long] =
+    try fs.listStatus(new Path(rootPath, CommitDir)).toSeq
+      .filter(st => st.isFile && st.getPath.getName.startsWith("c-"))
+      .map(_.getPath.getName.stripPrefix("c-").toLong)
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** The version a commit names; None if a concurrent publisher's GC
+    * collected the commit since it was listed. */
+  private def commitAt(fs: FileSystem, rootPath: Path, seq: Long): Option[String] =
+    try Some(readCommit(fs, commitPath(rootPath, seq)))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** Retained commit-log entries, seq-ascending (a vanished entry is
+    * simply no longer part of the retained log). */
+  private def logEntries(fs: FileSystem, rootPath: Path): Seq[(Long, String)] =
+    commitSeqs(fs, rootPath).sorted.flatMap(seq =>
+      commitAt(fs, rootPath, seq).map(seq -> _))
+
+  /** Log head (seq, version), if the table has ever been published: one
+    * listing of the commit dir and one read of its highest seq. GC only
+    * evicts commits at least `keepVersions` behind a newer head, so a
+    * listed top that vanished before its read means the log moved on —
+    * list again. */
+  @annotation.tailrec
+  private def head(fs: FileSystem, rootPath: Path): Option[(Long, String)] = {
+    val seqs = commitSeqs(fs, rootPath)
+    if (seqs.isEmpty) None
+    else {
+      val top = seqs.max
+      commitAt(fs, rootPath, top) match {
+        case Some(v) => Some((top, v))
+        case None => head(fs, rootPath)
+      }
+    }
+  }
 
   /** One exclusive commit attempt at `seq`; false on collision.
     *
@@ -130,7 +151,7 @@ object OnlineTable {
                         version: String): Boolean = {
     val dir = new Path(rootPath, CommitDir)
     if (!fs.exists(dir)) fs.mkdirs(dir)
-    val p = new Path(dir, f"c-$seq%012d")
+    val p = commitPath(rootPath, seq)
     if ("file" == fs.getScheme) {
       import java.nio.file.{Files, Paths}
       val target = Paths.get(p.toUri.getPath)
@@ -277,7 +298,7 @@ object OnlineTable {
       }
     }
     entries.dropRight(keepVersions).foreach { case (seq, _) =>
-      fs.delete(new Path(new Path(rootPath, CommitDir), f"c-$seq%012d"), false)
+      fs.delete(commitPath(rootPath, seq), false)
     }
   }
 
@@ -352,30 +373,51 @@ object OnlineTable {
 
   private def isManifest(v: String): Boolean = v.startsWith(ManifestPrefix)
 
-  /** Bucket count + bucket -> generation-dir (root-relative). */
+  private val SchemaTag = "schema="
+
+  /** Bucket count, bucket -> generation-dir (root-relative), and the
+    * snapshot's schema. */
   private[store] final case class Manifest(nBuckets: Int,
-                                           entries: Map[Int, String])
+                                           entries: Map[Int, String],
+                                           schema: StructType)
 
   private def readManifest(fs: FileSystem, rootPath: Path,
                            name: String): Manifest = {
     val lines = readSmall(fs, new Path(rootPath, name)).split('\n')
     val n = lines.head.stripPrefix("nbuckets=").toInt
-    val entries = lines.tail.filter(_.nonEmpty).map { l =>
+    val (schemaLine, bucketLines) =
+      lines.tail.filter(_.nonEmpty).partition(_.startsWith(SchemaTag))
+    val entries = bucketLines.map { l =>
       val Array(b, rel) = l.split('\t')
       b.toInt -> rel
     }.toMap
-    Manifest(n, entries)
+    require(schemaLine.nonEmpty, s"manifest $name records no schema")
+    Manifest(n, entries,
+      DataType.fromJson(schemaLine.head.stripPrefix(SchemaTag)).asInstanceOf[StructType])
   }
 
-  private def writeManifest(fs: FileSystem, rootPath: Path,
-                            m: Manifest): String = {
+  /** Write a manifest for a snapshot whose rows have schema `schema`,
+    * recorded as a parquet read reports it (every field nullable). */
+  private def writeManifest(fs: FileSystem, rootPath: Path, nBuckets: Int,
+                            entries: Map[Int, String],
+                            schema: StructType): String = {
     val name = freshName(ManifestPrefix)
-    val body = (s"nbuckets=${m.nBuckets}" +:
-      m.entries.toSeq.sortBy(_._1).map { case (b, rel) => s"$b\t$rel" })
+    val body = (Seq(s"nbuckets=$nBuckets", SchemaTag + nullable(schema).json) ++
+      entries.toSeq.sortBy(_._1).map { case (b, rel) => s"$b\t$rel" })
       .mkString("\n")
     val out = fs.create(new Path(rootPath, name), false)
     try out.write(body.getBytes("UTF-8")) finally out.close()
     name
+  }
+
+  /** `t` with every field, element and value nullable. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
   }
 
   /** Paths of the manifest's bucket dirs whose bucket `keep` admits,
@@ -384,6 +426,17 @@ object OnlineTable {
                           keep: Int => Boolean): Seq[String] =
     man.entries.toSeq.sortBy(_._1)
       .collect { case (b, rel) if keep(b) => new Path(rootPath, rel).toString }
+
+  /** The rows of the manifest's buckets that `keep` admits, read with the
+    * recorded schema — no inference job — and empty, not failing, when
+    * `keep` admits none. */
+  private def readBuckets(spark: SparkSession, rootPath: Path, man: Manifest,
+                          keep: Int => Boolean): DataFrame = {
+    val paths = bucketPaths(rootPath, man, keep)
+    if (paths.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), man.schema)
+    else spark.read.schema(man.schema).parquet(paths: _*)
+  }
 
   /** The hash bucket of each row of `df`. Integral key columns hash as
     * bigint, so writer and reader agree on placement whatever integral
@@ -452,19 +505,19 @@ object OnlineTable {
       if (touched.isEmpty) None // empty batch: nothing to change
       else {
         val prev = prevMan match {
-          case Some(man) =>
-            val paths = bucketPaths(rootPath, man, touched)
-            if (paths.isEmpty) batch.limit(0) else spark.read.parquet(paths: _*)
+          case Some(man) => readBuckets(spark, rootPath, man, touched)
           case None =>
             h0.fold(batch.limit(0)) { case (_, v) => snapshot(spark, fs, rootPath, v) }
         }
-        val written = writeGeneration(merge(prev, batch), key, n, fs, rootPath)
+        val merged = merge(prev, batch)
+        val written = writeGeneration(merged, key, n, fs, rootPath)
         require(written.keySet.subsetOf(touched),
           "merge produced rows outside the touched buckets — the merge " +
             "callback must not invent keys the batch does not carry")
         val entries = prevMan.fold(Map.empty[Int, String])(_.entries -- touched) ++
           written
-        if (entries.nonEmpty) Some(writeManifest(fs, rootPath, Manifest(n, entries)))
+        if (entries.nonEmpty)
+          Some(writeManifest(fs, rootPath, n, entries, merged.schema))
         // nothing merged out: on a FIRST publish this is just an empty
         // micro-batch against a never-published table (a stream's first
         // trigger is often empty) — a no-op, not an error; on a LIVE
@@ -538,10 +591,10 @@ object OnlineTable {
     casLoop(fs, rootPath, keepVersions) { h0 =>
       h0.flatMap { case (_, v) =>
         val n = count(Some(v).filter(isManifest).map(readManifest(fs, rootPath, _)))
-        val written = writeGeneration(snapshot(spark, fs, rootPath, v),
-          key, n, fs, rootPath)
+        val snap = snapshot(spark, fs, rootPath, v)
+        val written = writeGeneration(snap, key, n, fs, rootPath)
         if (written.isEmpty) None // empty snapshot: nothing to rewrite
-        else Some(writeManifest(fs, rootPath, Manifest(n, written)))
+        else Some(writeManifest(fs, rootPath, n, written, snap.schema))
       }
     }
   }
@@ -552,7 +605,14 @@ object OnlineTable {
     * keys hash into — O(|keys|) files instead of the whole entity
     * table, the read-side half of the bucketed-publish bargain. Falls
     * back to a full-snapshot scan for non-bucketed versions. Returns
-    * None only if the table was never published. */
+    * None only if the table was never published.
+    *
+    * Building the frame reads the log head and the manifest, which
+    * carries the snapshot's schema, so the scan needs no inference job.
+    * The keys' buckets come from the writer's own [[bucketExpr]],
+    * collected to the driver: a local key set (a `LocalRelation`, as a
+    * serving request builds it) folds that projection at optimization,
+    * so routing runs no Spark job; any other key set runs one. */
   def lookup(spark: SparkSession, root: String, key: Seq[String],
              keys: DataFrame): Option[DataFrame] = {
     val (fs, rootPath) = fsOf(spark, root)
@@ -561,13 +621,9 @@ object OnlineTable {
         if (!isManifest(v)) snapshot(spark, fs, rootPath, v)
         else {
           val man = readManifest(fs, rootPath, v)
-          val touched = keys
-            .select(bucketExpr(keys, key, man.nBuckets).as(BucketCol))
-            .distinct().collect().map(_.getInt(0)).toSet
-          val paths = bucketPaths(rootPath, man, touched)
-          if (paths.isEmpty)
-            snapshot(spark, fs, rootPath, v).limit(0) // no key hits any bucket
-          else spark.read.parquet(paths: _*)
+          val touched = keys.select(bucketExpr(keys, key, man.nBuckets))
+            .collect().map(_.getInt(0)).toSet
+          readBuckets(spark, rootPath, man, touched)
         }
       snap.join(broadcast(keys), key)
     }
@@ -587,8 +643,7 @@ object OnlineTable {
   private def snapshot(spark: SparkSession, fs: FileSystem, rootPath: Path,
                        version: String): DataFrame =
     if (isManifest(version))
-      spark.read.parquet(
-        bucketPaths(rootPath, readManifest(fs, rootPath, version), _ => true): _*)
+      readBuckets(spark, rootPath, readManifest(fs, rootPath, version), _ => true)
     else spark.read.parquet(new Path(rootPath, version).toString)
 
   /** Time-travel read of a retained snapshot (see [[listVersions]]). */

@@ -9,6 +9,25 @@ object TestSpark {
     s
   }
 
+  /** Spark jobs `f` starts on this thread, counted by a listener filtered
+    * to a fresh job group, with the bus drained before and after. */
+  def jobsRun(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "job count")
+    try { f; org.apache.spark.TestBus.drain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+    n.get
+  }
+
   /** Run `f` with a wall-clock bound — for asserting that adversarial input
     * fails FAST rather than spinning (a plain test would just hang the
     * suite). Throws TimeoutException if the deadline passes. */

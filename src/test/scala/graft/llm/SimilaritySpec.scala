@@ -161,10 +161,91 @@ class SimilaritySpec extends AnyFunSuite {
     val per = Similarity.ivfTopKPersisted(qs, cells, k = 3, idx, nprobe = 2)
     assert(per.collect().toSet === mem,
       "persisted inverted-file probe must equal the in-memory probe")
-    // the probe plan must carry the cell pruning filter down to the scan:
-    // with partition-valued `cell`, an IN-filter on it is partition pruning
-    val plan = per.queryExecution.executedPlan.toString
-    assert(plan.contains("cell"), s"expected cell pruning in plan:\n$plan")
+    // the scan reads only files under the probed cells' dirs — for the
+    // whole batch, and for one query that probes 2 of the 6 cells
+    def probedCells(q: org.apache.spark.sql.DataFrame): Set[Int] =
+      q.select(Similarity.ivfProbeCells(col("qvec"), idx, 2))
+        .as[Seq[Int]].collect().flatten.toSet
+    Seq(qs, qs.limit(1)).foreach { q =>
+      val probed = probedCells(q)
+      val files = Similarity.ivfTopKPersisted(q, cells, k = 3, idx, nprobe = 2)
+        .inputFiles
+      assert(files.nonEmpty && files.forall(f =>
+        probed.exists(c => f.contains(s"/cell=$c/"))),
+        s"scan outside the probed cells $probed: ${files.toSeq}")
+    }
+    assert(probedCells(qs.limit(1)).size === 2)
+  }
+
+  /** `qs` written to parquet and read back: the same rows, not local. */
+  private def fromParquet(qs: org.apache.spark.sql.DataFrame) = {
+    val dir = java.nio.file.Files.createTempDirectory("ivf_q").toString + "/q"
+    qs.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("ivfTopKPersisted builds on a local query batch with no Spark job; " +
+      "the same queries read from parquet give the same rows") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val rnd = new scala.util.Random(53)
+    val corpus = (0L until 300L).map(i =>
+      (i, Seq.fill(8)(rnd.nextGaussian().toFloat))).toDF("nid", "nvec")
+    val qs = (0L until 12L).map(i =>
+      (1000L + i, Seq.fill(8)(rnd.nextGaussian().toFloat))).toDF("qid", "qvec")
+    val idx = IvfIndex.fit(corpus, nlist = 6, fitFraction = 1.0)
+    val cells = java.nio.file.Files.createTempDirectory("ivf_local").toString +
+      "/cells"
+    IvfIndex.buildInverted(corpus, idx, cells)
+    assert(qs.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    // the session infers the inverted file's schema on its first probe
+    Similarity.ivfTopKPersisted(qs, cells, k = 3, idx, nprobe = 2)
+    var local: org.apache.spark.sql.DataFrame = null
+    assert(TestSpark.jobsRun {
+      local = Similarity.ivfTopKPersisted(qs, cells, k = 3, idx, nprobe = 2)
+    } === 0)
+    val got = local.collect().toSet
+    val nonLocal = fromParquet(qs)
+    assert(!nonLocal.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(Similarity.ivfTopKPersisted(nonLocal, cells, k = 3, idx, nprobe = 2)
+      .collect().toSet === got)
+    assert(Similarity.ivfTopK(qs, corpus, k = 3, idx, nprobe = 2)
+      .collect().toSet === got)
+    assert(got.size === 36)
+  }
+
+  test("ivfTopKPersisted: a probed cell with no dir contributes no rows") {
+    // three clusters and a fourth centroid far from all of them: no vector
+    // is assigned to cell 3, so the inverted file has no cell=3 dir
+    val rnd = new scala.util.Random(61)
+    val anchors = Seq(Seq(1f, 0f), Seq(0f, 1f), Seq(-1f, 0f))
+    val corpus = (0L until 90L).map(i => (i,
+      anchors((i % 3).toInt).map(_ + 0.1f * rnd.nextGaussian().toFloat)))
+      .toDF("nid", "nvec")
+    val idx = IvfIndex.Model(anchors.zipWithIndex.map { case (a, i) =>
+      (i, a, 1.0) } :+ ((3, Seq(50f, 50f), 5000.0)))
+    val cells = java.nio.file.Files.createTempDirectory("ivf_empty").toString +
+      "/cells"
+    IvfIndex.buildInverted(corpus, idx, cells)
+    assert(!new java.io.File(cells, "cell=3").exists())
+    val qs = (0L until 6L).map(i => (1000L + i,
+      anchors((i % 3).toInt).map(_ + 0.1f * rnd.nextGaussian().toFloat)))
+      .toDF("qid", "qvec")
+    // nprobe = nlist: every query probes the empty cell too
+    val want = Similarity.ivfTopK(qs, corpus, k = 3, idx, nprobe = 4)
+      .collect().toSet
+    assert(want.size === 18)
+    Seq(qs, fromParquet(qs)).foreach { q =>
+      assert(Similarity.ivfTopKPersisted(q, cells, k = 3, idx, nprobe = 4)
+        .collect().toSet === want)
+    }
+    // a query whose only probed cell is the empty one gets no rows
+    val far = Seq((2000L, Seq(50f, 50f))).toDF("qid", "qvec")
+    Seq(far, fromParquet(far)).foreach { q =>
+      assert(Similarity.ivfTopKPersisted(q, cells, k = 3, idx, nprobe = 1)
+        .count() === 0L)
+      assert(Similarity.ivfTopKBudgeted(q, cells, k = 3, idx, nprobe = 1,
+        budget = 10).count() === 0L)
+    }
   }
 
   test("ivfTopKBudgeted: exact ledger, slack budget equals unbudgeted, " +

@@ -96,25 +96,6 @@ class CategorifySpec extends AnyFunSuite {
       === hinted.collect().map(_.getLong(0)).sorted.toSeq)
   }
 
-  /** Spark jobs `f` starts on this thread, counted by a listener with the
-    * bus drained before and after. */
-  private def jobsRun(f: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"catg-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
-    }
-    org.apache.spark.TestBus.drain(sc)
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "categorify job count")
-    try { f; org.apache.spark.TestBus.drain(sc) }
-    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
-    n.get
-  }
-
   private def tmpDir() = java.nio.file.Files.createTempDirectory("catg").toString
 
   test("save/load round-trip") {
@@ -131,9 +112,9 @@ class CategorifySpec extends AnyFunSuite {
     val df = Seq(("a", "x", "p"), ("b", "x", "q"), ("b", "y", "q")).toDF("u", "v", "w")
     val model = Categorify.fit(df, Seq("u", "v", "w"))
     val dir = tmpDir()
-    assert(jobsRun(model.save(dir)) === 1)
+    assert(TestSpark.jobsRun(model.save(dir)) === 1)
     var loaded: Categorify.Model = null
-    assert(jobsRun { loaded = Categorify.load(spark, dir, Seq("u", "v", "w")) } === 0)
+    assert(TestSpark.jobsRun { loaded = Categorify.load(spark, dir, Seq("u", "v", "w")) } === 0)
     assert(loaded.sizes === model.sizes)
     Seq("u", "v", "w").foreach { c =>
       assert(loaded.lookups(c).as[(String, Long)].collect().toMap ===

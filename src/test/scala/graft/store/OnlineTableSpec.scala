@@ -334,6 +334,73 @@ class OnlineTableSpec extends AnyFunSuite {
       Seq(1L).toDF("k")).isEmpty)
   }
 
+  test("lookup routes a local key set with no Spark job; parquet-read keys " +
+      "return the same rows") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val root = java.nio.file.Files.createTempDirectory("otb12").toString + "/t"
+    val m = latestMerge(Seq("k"), "ts", "ts")
+    // an INT key column, requested with int and with bigint keys
+    OnlineTable.publishBucketedBatch(
+      (1 to 300).map(kk => (kk, 1L, s"v$kk")).toDF("k", "ts", "v"),
+      root, Seq("k"), m, nBuckets = 16)
+    val want = (1L to 14L).map(kk => (kk, s"v$kk")).toSet
+    def rows(keys: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
+      OnlineTable.lookup(spark, root, Seq("k"), keys).get
+        .select(col("k").cast("long"), col("v")).as[(Long, String)]
+        .collect().toSet
+    // 14 present keys and 2 absent ones
+    val ks = (1L to 14L) ++ Seq(5000L, 5001L)
+    Seq(ks.map(_.toInt).toDF("k"), ks.toDF("k")).foreach { local =>
+      val t = local.schema("k").dataType
+      assert(local.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      assert(TestSpark.jobsRun(OnlineTable.lookup(spark, root, Seq("k"), local)) === 0,
+        s"building a lookup on local $t keys ran a job")
+      val dir = java.nio.file.Files.createTempDirectory("otb12k").toString + "/k"
+      local.write.parquet(dir)
+      val fromFile = spark.read.parquet(dir)
+      assert(!fromFile.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      assert(rows(local) === want, s"$t local keys")
+      assert(rows(fromFile) === want, s"$t parquet keys")
+    }
+  }
+
+  test("bucketed manifests record the snapshot schema; read runs no Spark job") {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val root = java.nio.file.Files.createTempDirectory("otb13").toString + "/t"
+    val m = latestMerge(Seq("k"), "ts", "ts")
+    def recorded: StructType = {
+      val v = OnlineTable.currentVersion(spark, root).get
+      val src = scala.io.Source.fromFile(s"$root/$v")
+      try DataType.fromJson(src.getLines().find(_.startsWith("schema=")).get
+        .stripPrefix("schema=")).asInstanceOf[StructType]
+      finally src.close()
+    }
+    // the schema Spark infers from the live bucket files themselves
+    def inferred: StructType = spark.read.parquet(
+      genSubdirs(root).toSeq.map(d => s"$root/$d"): _*).schema
+    def check(step: String): Unit = {
+      assert(recorded === inferred, s"$step: manifest schema")
+      var read: org.apache.spark.sql.DataFrame = null
+      assert(TestSpark.jobsRun { read = OnlineTable.read(spark, root).get } === 0,
+        s"$step: reading the snapshot ran a job")
+      assert(read.schema === inferred, s"$step: read schema")
+      assert(read.count() === 40L, s"$step: rows")
+    }
+    // non-nullable columns and a nested array: the manifest records them
+    // as a parquet read reports them
+    OnlineTable.publishBucketedBatch(
+      (1 to 40).map(kk => (kk, 1L, s"v$kk", Seq(kk.toDouble))).toDF("k", "ts", "v", "xs"),
+      root, Seq("k"), m, nBuckets = 8)
+    check("publishBucketedBatch")
+    OnlineTable.publishBucketedBatch(
+      Seq((3, 2L, "u3", Seq(0.5))).toDF("k", "ts", "v", "xs"), root, Seq("k"), m)
+    check("upsert")
+    OnlineTable.rebucket(spark, root, Seq("k"), 4)
+    check("rebucket")
+    OnlineTable.compact(spark, root, Seq("k"))
+    check("compact")
+  }
+
   test("an empty FIRST micro-batch is a no-op, not a crash") {
     val root = java.nio.file.Files.createTempDirectory("otb8").toString + "/t"
     val m = latestMerge(Seq("k"), "ts", "ts")
