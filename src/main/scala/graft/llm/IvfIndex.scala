@@ -67,11 +67,7 @@ object IvfIndex {
     * half of fit-once/probe-many, exactly like the centroid fit.
     * `corpus` must expose `nid` and the embedding as `nvec`. */
   def buildInverted(corpus: DataFrame, index: Model, path: String): Unit =
-    corpus
-      .withColumn("cell", Similarity.ivfCell(
-        org.apache.spark.sql.functions.col("nvec"), index))
-      .repartition(org.apache.spark.sql.functions.col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(path)
+    writeInverted(corpus, index, path, "overwrite")
 
   /** Incremental index maintenance: assign a NEW batch of vectors to the
     * EXISTING centroids and append into the inverted file's cell
@@ -86,11 +82,27 @@ object IvfIndex {
     * policy — the retrieval-quality analogue of a drift monitor's
     * rolling re-baseline. `batch` must expose `nid` and `nvec`. */
   def appendInverted(batch: DataFrame, index: Model, path: String): Unit =
-    batch
-      .withColumn("cell", Similarity.ivfCell(
-        org.apache.spark.sql.functions.col("nvec"), index))
-      .repartition(org.apache.spark.sql.functions.col("cell"))
-      .write.partitionBy("cell").mode("append").parquet(path)
+    writeInverted(batch, index, path, "append")
+
+  /** The file under an inverted file's root recording its schema as a
+    * parquet read reports it, so a probe reads with no inference job
+    * (Spark's file listing skips `_`-prefixed names). */
+  private[llm] val SchemaFile = "_schema.json"
+
+  /** Tag `rows` with their cells, write them partitioned by cell, and
+    * record the tree's schema in [[SchemaFile]]. */
+  private def writeInverted(rows: DataFrame, index: Model, path: String,
+                            mode: String): Unit = {
+    val tagged = rows.withColumn("cell", Similarity.ivfCell(col("nvec"), index))
+    tagged.repartition(col("cell"))
+      .write.partitionBy("cell").mode(mode).parquet(path)
+    val file = new org.apache.hadoop.fs.Path(path, SchemaFile)
+    val out = file.getFileSystem(rows.sparkSession.sessionState.newHadoopConf())
+      .create(file, true)
+    try out.write(graft.store.OnlineTable.parquetReadSchema(tagged.schema)
+      .json.getBytes("UTF-8"))
+    finally out.close()
+  }
 
   /** Occupancy-skew staleness verdict for a persisted inverted file.
     * All triggers are EXACT integer comparisons on cell counts:
@@ -166,10 +178,10 @@ object IvfIndex {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     // the layout+params tag versions the on-disk tree: a JVM running
-    // older code (centroids-only layout, nlist=16) and this one can
-    // never load each other's index dirs
+    // older code (centroids-only layout, nlist=16, or cells without
+    // `_schema.json`) and this one can never load each other's index dirs
     val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest((key + s"\u0000ivf2:nlist=$nlist").getBytes("UTF-8"))
+      .digest((key + s"\u0000ivf4:nlist=$nlist").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_ivf_$digest")
     val fin = base.resolve("index")

@@ -2,9 +2,8 @@ package graft.llm
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -118,10 +117,9 @@ object Similarity {
     * time (assignment happened once, at build). Identical output to
     * [[ivfTopK]] on the same corpus/index (SimilaritySpec asserts it).
     *
-    * The probed-cell set is taken on the driver and names the cell dirs
-    * the scan reads — bounded by nlist by construction, so this is
-    * driver-sized regardless of query-batch size. A local query batch
-    * (a `LocalRelation`) is routed while the plan is optimized, with no
+    * Each query's `nprobe` cells are collected to the driver, and their
+    * union names the cell dirs the scan reads. A local query batch (a
+    * `LocalRelation`) is routed while the plan is optimized, with no
     * Spark job; any other batch runs one job to collect its cells. */
   def ivfTopKPersisted(queries: DataFrame, cellsPath: String, k: Int,
                        index: IvfIndex.Model, nprobe: Int): DataFrame = {
@@ -132,43 +130,24 @@ object Similarity {
 
   /** The persisted probe's two sides: each query exploded to its
     * `nprobe` best cells, and the inverted file's scan of only the cells
-    * some query probes. A local batch's cells are computed by the
-    * folded projection (no job); any other batch's are exploded and
-    * collected distinct, one job whose result stays nlist-bounded. */
+    * some query probes. The probes are collected to the driver: a local
+    * batch folds the projection at optimization (no job), any other
+    * batch runs one single-stage job. */
   private def ivfProbePersisted(queries: DataFrame, cellsPath: String,
                                 index: IvfIndex.Model,
                                 nprobe: Int): (DataFrame, DataFrame) = {
     val probes = ivfProbeCells(col("qvec"), index, nprobe)
-    val queryCells = queries.withColumn("cell", explode(probes))
-    val probed =
-      if (queries.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
-        queries.select(probes).collect().flatMap(_.getSeq[Int](0)).toSet
-      else queryCells.select("cell").distinct().collect().map(_.getInt(0)).toSet
-    (queryCells, readCells(queries.sparkSession, cellsPath, probed))
-  }
-
-  /** Each session's inverted-file schemas by cells path, with the root
-    * dir's modification time each was read at. */
-  private val cellsSchemas =
-    new java.util.WeakHashMap[SparkSession, java.util.Map[String, (Long, StructType)]]()
-
-  /** The inverted file's schema, inferred once per session and root
-    * modification time (a rebuild or append rewrites the root). */
-  private def cellsSchema(spark: SparkSession, root: String,
-                          mtime: Long): StructType = {
-    val bySession = cellsSchemas.synchronized(cellsSchemas.computeIfAbsent(
-      spark, _ => new java.util.concurrent.ConcurrentHashMap()))
-    Option(bySession.get(root)).collect { case (`mtime`, s) => s }.getOrElse {
-      val s = spark.read.parquet(root).schema
-      bySession.put(root, (mtime, s))
-      s
-    }
+    val probed = queries.select(probes).collect().flatMap(_.getSeq[Int](0)).toSet
+    (queries.withColumn("cell", explode(probes)),
+      readCells(queries.sparkSession, cellsPath, probed))
   }
 
   /** The inverted file's rows in the `probed` cells: a scan of only their
     * `cell=<i>` dirs, the probed cells entering as paths, not as a
-    * per-call literal list the plan would compile. A cell no vector was
-    * assigned to has no dir and contributes no rows. */
+    * per-call literal list the plan would compile, read with the schema
+    * the writer recorded ([[IvfIndex.SchemaFile]]), so no inference job
+    * runs. A cell no vector was assigned to has no dir and contributes
+    * no rows. */
   private def readCells(spark: SparkSession, cellsPath: String,
                         probed: Set[Int]): DataFrame = {
     val root = new Path(cellsPath)
@@ -177,8 +156,13 @@ object Similarity {
     val dirs = fs.listStatus(root).toSeq
       .filter(st => st.isDirectory && names(st.getPath.getName))
       .map(_.getPath.toString).sorted
-    val schema = cellsSchema(spark, cellsPath,
-      fs.getFileStatus(root).getModificationTime)
+    val schemaFile = new Path(root, IvfIndex.SchemaFile)
+    require(fs.exists(schemaFile), s"inverted file $cellsPath records no " +
+      "schema; write it with IvfIndex.buildInverted")
+    val in = fs.open(schemaFile)
+    val schema = try DataType.fromJson(
+      new String(in.readAllBytes(), "UTF-8")).asInstanceOf[StructType]
+    finally in.close()
     if (dirs.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     else spark.read.schema(schema).option("basePath", cellsPath).parquet(dirs: _*)

@@ -402,13 +402,17 @@ object OnlineTable {
                             entries: Map[Int, String],
                             schema: StructType): String = {
     val name = freshName(ManifestPrefix)
-    val body = (Seq(s"nbuckets=$nBuckets", SchemaTag + nullable(schema).json) ++
+    val body = (Seq(s"nbuckets=$nBuckets", SchemaTag + parquetReadSchema(schema).json) ++
       entries.toSeq.sortBy(_._1).map { case (b, rel) => s"$b\t$rel" })
       .mkString("\n")
     val out = fs.create(new Path(rootPath, name), false)
     try out.write(body.getBytes("UTF-8")) finally out.close()
     name
   }
+
+  /** The schema a parquet read reports for rows written with `schema`. */
+  private[graft] def parquetReadSchema(schema: StructType): StructType =
+    nullable(schema).asInstanceOf[StructType]
 
   /** `t` with every field, element and value nullable. */
   private def nullable(t: DataType): DataType = t match {

@@ -93,6 +93,7 @@ class SimilaritySpec extends AnyFunSuite {
     val appended = (0 until 300).map(i =>
       (1000L + i, around(newAnchor, 0.2f)))
     IvfIndex.appendInverted(appended.toDF("nid", "nvec"), index, cells)
+    assert(recordedSchema(cells) === spark.read.parquet(cells).schema)
 
     // 1. recall-after-append tripwire (the q239 shape: fixed data +
     // seeds, so the floor either holds forever or the append path
@@ -156,6 +157,7 @@ class SimilaritySpec extends AnyFunSuite {
     val cells = java.nio.file.Files.createTempDirectory("ivf_inv").toString +
       "/cells"
     IvfIndex.buildInverted(corpus, idx, cells)
+    assert(recordedSchema(cells) === spark.read.parquet(cells).schema)
     val mem = Similarity.ivfTopK(qs, corpus, k = 3, idx, nprobe = 2)
       .collect().toSet
     val per = Similarity.ivfTopKPersisted(qs, cells, k = 3, idx, nprobe = 2)
@@ -177,6 +179,12 @@ class SimilaritySpec extends AnyFunSuite {
     assert(probedCells(qs.limit(1)).size === 2)
   }
 
+  /** The schema an inverted file's writer recorded under its root. */
+  private def recordedSchema(cells: String) =
+    org.apache.spark.sql.types.DataType.fromJson(new String(
+      java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(cells, IvfIndex.SchemaFile)), "UTF-8"))
+
   /** `qs` written to parquet and read back: the same rows, not local. */
   private def fromParquet(qs: org.apache.spark.sql.DataFrame) = {
     val dir = java.nio.file.Files.createTempDirectory("ivf_q").toString + "/q"
@@ -197,8 +205,7 @@ class SimilaritySpec extends AnyFunSuite {
       "/cells"
     IvfIndex.buildInverted(corpus, idx, cells)
     assert(qs.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
-    // the session infers the inverted file's schema on its first probe
-    Similarity.ivfTopKPersisted(qs, cells, k = 3, idx, nprobe = 2)
+    // no warm-up probe: the schema is read from the tree, never inferred
     var local: org.apache.spark.sql.DataFrame = null
     assert(TestSpark.jobsRun {
       local = Similarity.ivfTopKPersisted(qs, cells, k = 3, idx, nprobe = 2)
@@ -246,6 +253,20 @@ class SimilaritySpec extends AnyFunSuite {
       assert(Similarity.ivfTopKBudgeted(q, cells, k = 3, idx, nprobe = 1,
         budget = 10).count() === 0L)
     }
+  }
+
+  test("ivfTopKPersisted: a cells tree recording no schema fails naming it") {
+    val corpus = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f))).toDF("nid", "nvec")
+    val idx = IvfIndex.fit(corpus, nlist = 2, fitFraction = 1.0)
+    val cells = java.nio.file.Files.createTempDirectory("ivf_noschema")
+      .toString + "/cells"
+    corpus.withColumn("cell", Similarity.ivfCell(col("nvec"), idx))
+      .write.partitionBy("cell").parquet(cells)
+    val qs = Seq((10L, Seq(1f, 0f))).toDF("qid", "qvec")
+    val e = intercept[IllegalArgumentException](
+      Similarity.ivfTopKPersisted(qs, cells, k = 1, idx, nprobe = 1))
+    assert(e.getMessage.contains(cells) &&
+      e.getMessage.contains("records no schema"), e.getMessage)
   }
 
   test("ivfTopKBudgeted: exact ledger, slack budget equals unbudgeted, " +
