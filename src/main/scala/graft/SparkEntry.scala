@@ -5320,11 +5320,11 @@ object SparkEntry {
     // ---- Streaming CDC: foreachBatch MERGE into the online store -------------------
     // q204's MERGE run through the REAL streaming machinery: the op
     // stream lands batch by batch in foreachBatch, each batch
-    // compacts to last-op-per-key and merges into a versioned
-    // OnlineTable op log through its read-modify-write publishMerge
-    // (latest-per-key of a union — idempotent
-    // under batch retries, correct under ANY batch split because the
-    // stored row keeps its (ts, tie) order key), and the final
+    // compacts to last-op-per-key and upserts into a versioned
+    // OnlineTable op log through publishBucketedBatch, which merges
+    // only the buckets the batch touches (latest-per-key of a union —
+    // idempotent under batch retries, correct under ANY batch split
+    // because the stored row keeps its (ts, tie) order key), and the final
     // snapshot applies the SAME full-outer merge as q204. The oracle
     // IS q204's oracle — stream-batch consistency for the MERGE
     // contract, hash-checked end to end (the q71/q123 posture, with
@@ -5348,20 +5348,19 @@ object SparkEntry {
             .cast("long").as("v6"))
       val q = ops.writeStream.outputMode("update")
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          val sp = batch.sparkSession
           val latestBatch = PointInTime.latestPerKey(batch, Seq("key"),
             "ts_us", "event_id")
-          OnlineTable.publishMerge(sp, opsPath, {
-            case Some(ex) => PointInTime.latestPerKey(
-              ex.unionByName(latestBatch), Seq("key"), "ts_us",
-              "event_id")
-            case None => latestBatch
-          })
+          OnlineTable.publishBucketedBatch(latestBatch, opsPath, Seq("key"),
+            (prev, b) => PointInTime.latestPerKey(prev.unionByName(b),
+              Seq("key"), "ts_us", "event_id"))
         }
         .option("checkpointLocation", s"$root/ckpt")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      val lastOp = OnlineTable.read(s, opsPath).get
+      // no op ever landed (every batch empty): an empty op log
+      val lastOp = OnlineTable.read(s, opsPath)
+        .getOrElse(s.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](), ops.schema))
         .select(col("key"), col("op"), col("v6"))
       cdcApply(cdcBase(s, dir), lastOp).ordered(col("key"))
     }),

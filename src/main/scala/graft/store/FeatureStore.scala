@@ -29,25 +29,26 @@ object FeatureStore {
 
   /** Offline -> online materialization: collapse history to the newest row
     * per entity key (by event time, tie-broken deterministically) and
-    * publish a compact keyed snapshot through [[OnlineTable]] (one
-    * commit-log entry — readers never see a half-written table). Streaming
-    * ingest reaches the same layout via Streams.upsertOnline. */
+    * publish it through [[OnlineTable.publish]] as one snapshot
+    * hash-bucketed by the view's entity columns (one commit-log entry —
+    * readers never see a half-written table). Streaming ingest upserts
+    * into the same layout via Streams.upsertOnline. */
   def materializeOnline(view: FeatureView, source: DataFrame,
                         path: String, tieBreak: String = null): Unit = {
     val tb = Option(tieBreak).getOrElse(view.eventTime)
     OnlineTable.publish(
       PointInTime.latestPerKey(view.project(source), view.entities,
         view.eventTime, tb),
-      path)
+      path, view.entities)
   }
 
   /** Online point lookup: entity keys -> latest feature row. The requested
     * key set is small by construction (a serving batch), so it broadcasts —
-    * the online table is never shuffled, and on a BUCKETED snapshot
-    * (Streams.upsertOnline's layout) only the gen dirs the keys hash
-    * into are scanned at all ([[OnlineTable.lookup]]). A local key set is
-    * routed to its buckets on the driver, and the manifest carries the
-    * snapshot's schema, so building the lookup runs no Spark job. */
+    * the online table is never shuffled, and only the bucket dirs the
+    * keys hash into are scanned at all ([[OnlineTable.lookup]]). A local
+    * key set is routed to its buckets on the driver, and the manifest
+    * carries the snapshot's schema, so building the lookup runs no Spark
+    * job. */
   def getOnlineFeatures(spark: SparkSession, path: String,
                         view: FeatureView, keys: DataFrame): DataFrame =
     OnlineTable.lookup(spark, path, view.entities, keys)

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, xxhash64}
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType,
   LongType, MapType, ShortType, StructType}
 
-/** Versioned online-table layout with an optimistic-concurrency commit
-  * log — the object-store-safe replacement for directory-rename swaps
-  * (which are neither atomic nor portable off a local filesystem:
+/** Versioned, bucketed online-table layout with an optimistic-concurrency
+  * commit log — the object-store-safe replacement for directory-rename
+  * swaps (which are neither atomic nor portable off a local filesystem:
   * `java.io.File` cannot address HDFS/S3, and S3 has no atomic
   * directory rename at all).
   *
@@ -17,42 +17,40 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType,
   *   root/_commits/c-<seq>   <- the COMMIT LOG: one file per commit,
   *                              created EXCLUSIVELY, naming the version;
   *                              the highest seq is the live version
-  *   root/v-<version>/       <- immutable, fully-written parquet snapshots
-  *   root/m-<version>        <- bucketed snapshots: a manifest naming...
-  *   root/g-<generation>/    <- ...immutable bucket-generation dirs
+  *   root/m-<version>        <- every snapshot: a manifest naming, per
+  *                              hash bucket of the key, one...
+  *   root/g-<generation>/    <- ...immutable bucket-generation dir
   * }}}
   *
-  * A publish writes a NEW version to completion, then commits by
-  * creating `_commits/c-<head+1>` with `overwrite=false` — an EXCLUSIVE
-  * create (atomic on posix and HDFS; on an object store the equivalent
-  * is a conditional PUT, e.g. S3 If-None-Match). Two concurrent
-  * publishers that both read head N both target `c-<N+1>`; the
-  * filesystem admits exactly ONE — the loser observes the collision and
-  * either retries against the new head ([[publish]] and every
-  * read-modify-write publish) or surfaces [[ConcurrentPublishException]]
-  * ([[publishIf]], the compare-and-set form: commit only if the live
-  * version still equals what the caller read). This is the multi-writer
-  * optimistic-concurrency core of the transactional table formats
-  * (Delta's `_delta_log/<n>.json` exclusive create is the same protocol).
+  * A publish writes a NEW generation and manifest to completion, then
+  * commits by creating `_commits/c-<head+1>` with `overwrite=false` — an
+  * EXCLUSIVE create (atomic on posix and HDFS; on an object store the
+  * equivalent is a conditional PUT, e.g. S3 If-None-Match). Two
+  * concurrent publishers that both read head N both target `c-<N+1>`;
+  * the filesystem admits exactly ONE — the loser observes the collision
+  * and re-derives against the new head, so every publisher lands in the
+  * log exactly once. This is the multi-writer optimistic-concurrency core
+  * of the transactional table formats (Delta's `_delta_log/<n>.json`
+  * exclusive create is the same protocol).
   *
   * Readers resolve the log head then scan immutable files, so they can
   * never observe a half-written table; a reader holding the previous
   * version keeps working because the previous snapshot is retained for
   * one publish cycle (older ones are garbage-collected). A writer crash
-  * before the commit leaves only an unreferenced version, collected by
-  * the first successful publish after it ages past [[OrphanGraceMs]];
-  * after the commit a publish only collects garbage, so a crash there
-  * leaves a consistent table.
+  * before the commit leaves only an unreferenced manifest and gen dir,
+  * collected by the first successful publish after they age past
+  * [[OrphanGraceMs]]; after the commit a publish only collects garbage,
+  * so a crash there leaves a consistent table.
   */
 object OnlineTable {
 
   private val CommitDir = "_commits"
   private val PublishRetries = 100
 
-  /** Grace window before an UNCOMMITTED version dir is collected: a
-    * concurrent publisher that has fully written its snapshot but not
-    * yet won its commit must not have the dir swept from under its
-    * commit (the torn-snapshot race). Committed-but-superseded
+  /** Grace window before an UNCOMMITTED manifest or gen dir is
+    * collected: a concurrent publisher that has fully written its
+    * snapshot but not yet won its commit must not have it swept from
+    * under its commit (the torn-snapshot race). Committed-but-superseded
     * snapshots need no grace — the log proves no commit can ever
     * reference them again. Crashed/lost-race orphans are collected by
     * the first successful publish after they age past this window. */
@@ -218,39 +216,18 @@ object OnlineTable {
   }
 
   /** A fresh, time-ordered file name under the table root. */
-  private def freshName(prefix: String,
-                        ts: Long = System.currentTimeMillis()): String =
-    f"$prefix$ts%013d-${java.util.UUID.randomUUID().toString.take(8)}"
-
-  /** Write `df` as a fresh immutable version dir; returns its name. */
-  private def writeVersion(df: DataFrame, rootPath: Path,
-                           fs: FileSystem): String = {
-    // strictly-increasing timestamps so version names always sort in
-    // creation order even for sub-millisecond back-to-back publishes
-    // (ORDER is defined by the log; the names are for debuggability)
-    val prevTs =
-      (if (fs.exists(rootPath)) fs.listStatus(rootPath).toSeq else Nil)
-        .map(_.getPath.getName).filter(_.startsWith("v-"))
-        .sorted.lastOption
-        .flatMap(n => scala.util.Try(n.stripPrefix("v-").take(13).toLong).toOption)
-        .getOrElse(0L)
-    val version =
-      freshName("v-", math.max(System.currentTimeMillis(), prevTs + 1))
-    df.write.mode("errorifexists")
-      .parquet(new Path(rootPath, version).toString)
-    version
-  }
+  private def freshName(prefix: String): String =
+    f"$prefix${System.currentTimeMillis()}%013d-${java.util.UUID.randomUUID().toString.take(8)}"
 
   /** Post-commit GC: retain the newest `keepVersions` committed
-    * snapshots, drop orphans and stale commit files. */
+    * manifests and the gen dirs they reference, drop orphans and stale
+    * commit files. */
   private def collectGarbage(fs: FileSystem, rootPath: Path,
                              keepVersions: Int): Unit = {
     // the log defines commit order; keep the newest keepVersions
-    // committed snapshots (a crashed publish's orphan was never
-    // committed, so it is dropped regardless of age)
+    // committed snapshots
     val entries = logEntries(fs, rootPath)
-    val keepEntries = entries.takeRight(keepVersions)
-    val keep = keepEntries.map(_._2).toSet
+    val keep = entries.takeRight(keepVersions).map(_._2).toSet
     val committed = entries.map(_._2).toSet
     val now = System.currentTimeMillis()
     // bucket-generation references: a gen subdir lives exactly as long
@@ -262,20 +239,14 @@ object OnlineTable {
       try readManifest(fs, rootPath, m).entries.values
       catch { case _: java.io.IOException => Nil }
     }.toSet
-    val keptRefs = refsOf(keep.filter(isManifest))
-    val evictedRefs = refsOf(
-      entries.dropRight(keepVersions).map(_._2).filter(isManifest))
+    val keptRefs = refsOf(keep)
+    val evictedRefs = refsOf(entries.dropRight(keepVersions).map(_._2))
     fs.listStatus(rootPath).foreach { st =>
       val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith("v-") && !keep.contains(name)) {
-        // superseded committed snapshots go immediately (the log proves
-        // no future commit can reference them); an UNCOMMITTED dir may
-        // be a concurrent publisher mid-commit — only collect it once
-        // it ages past the in-flight grace window
-        if (committed.contains(name) ||
-            now - st.getModificationTime > OrphanGraceMs)
-          fs.delete(st.getPath, true)
-      }
+      // superseded committed manifests go immediately (the log proves no
+      // future commit can reference them); an UNCOMMITTED one may be a
+      // concurrent publisher mid-commit — only collect it once it ages
+      // past the in-flight grace window
       if (st.isFile && name.startsWith(ManifestPrefix) &&
           !keep.contains(name)) {
         if (committed.contains(name) ||
@@ -302,76 +273,24 @@ object OnlineTable {
     }
   }
 
-  /** Publish `df` as the new live snapshot of the table at `root`,
-    * retaining the newest `keepVersions` committed snapshots (>= 2: the
-    * new one plus at least the previous for in-flight readers). Larger
-    * values give time-travel depth — [[readVersion]] can read any
-    * retained snapshot. Concurrent publishers are safe: commit
-    * collisions retry against the new head, so every publisher lands in
-    * the log exactly once, in commit order. */
-  def publish(df: DataFrame, root: String, keepVersions: Int = 2): Unit = {
-    require(keepVersions >= 2, "keepVersions must be >= 2")
-    val (fs, rootPath) = fsOf(df.sparkSession, root)
-    val version = writeVersion(df, rootPath, fs)
-    casLoop(fs, rootPath, keepVersions)(_ => Some(version))
-  }
-
-  /** Compare-and-set publish: commit ONLY if the live version is still
-    * `expected` (None = the table has never been published) at commit
-    * time — the optimistic-concurrency form for read-modify-write
-    * publishers (read snapshot + expected version, derive, publishIf).
-    * On a lost race the fully-written version dir is left UNCOMMITTED
-    * (invisible to every reader, collected by the next successful
-    * publish) and [[ConcurrentPublishException]] carries the new head
-    * so the caller can re-derive and retry. */
-  def publishIf(df: DataFrame, root: String, expected: Option[String],
-                keepVersions: Int = 2): Unit = {
-    require(keepVersions >= 2, "keepVersions must be >= 2")
-    val (fs, rootPath) = fsOf(df.sparkSession, root)
-    val h0 = head(fs, rootPath)
-    if (h0.map(_._2) != expected)
-      throw ConcurrentPublishException(expected, h0.map(_._2))
-    val version = writeVersion(df, rootPath, fs)
-    // someone took our seq: the expectation is stale by definition
-    if (!commitAfter(fs, rootPath, h0, version, keepVersions))
-      throw ConcurrentPublishException(expected, head(fs, rootPath).map(_._2))
-  }
-
-  /** Read-modify-write publish: read the live snapshot (None if never
-    * published), derive the next one with `derive`, CAS-commit; on a
-    * lost race RE-DERIVE from the winner's snapshot and try again, so no
-    * publisher's contribution is silently dropped (the lost-update
-    * anomaly the unconditional [[publish]] permits by design). */
-  def publishMerge(spark: SparkSession, root: String,
-                   derive: Option[DataFrame] => DataFrame,
-                   keepVersions: Int = 2): Unit = {
-    val (fs, rootPath) = fsOf(spark, root)
-    casLoop(fs, rootPath, keepVersions) { h0 =>
-      // the snapshot is pinned to the head this attempt commits over
-      val prev = h0.map { case (_, v) => snapshot(spark, fs, rootPath, v) }
-      Some(writeVersion(derive(prev), rootPath, fs))
-    }
-  }
-
-  // ---- Bucketed incremental snapshots --------------------------------
+  // ---- Bucketed snapshots --------------------------------------------
   //
-  // A committed version whose name starts with `m-` is a BUCKETED
-  // snapshot: a small manifest FILE mapping each hash bucket of the key
-  // to the immutable bucket-generation dir holding its rows. A batch
-  // publish rewrites ONLY the buckets the batch touches and re-points
-  // the rest at their existing generation dirs — O(touched buckets)
-  // write amplification instead of O(table), the difference between a
-  // micro-batch upsert into a billion-entity table and rewriting it
-  // every trigger. Commits ride the SAME exclusive-create log (CAS at
-  // head+1), so readers resolve one pointer and scan immutable dirs —
-  // a torn snapshot is impossible, and full (`v-`) and bucketed (`m-`)
-  // versions interleave freely in one table's history.
+  // Every committed version is a small manifest FILE mapping each hash
+  // bucket of the key to the immutable bucket-generation dir holding its
+  // rows. A batch publish rewrites ONLY the buckets the batch touches and
+  // re-points the rest at their existing generation dirs — O(touched
+  // buckets) write amplification instead of O(table), the difference
+  // between a micro-batch upsert into a billion-entity table and
+  // rewriting it every trigger; a point lookup scans only the buckets its
+  // keys hash into. Commits ride the exclusive-create log (CAS at
+  // head+1), so readers resolve one pointer and scan immutable dirs — a
+  // torn snapshot is impossible.
 
   private val ManifestPrefix = "m-"
   private val GenPrefix = "g-"
   private val BucketCol = "__graft_bucket"
-
-  private def isManifest(v: String): Boolean = v.startsWith(ManifestPrefix)
+  /** Bucket count of a table's first publish. */
+  private val DefaultBuckets = 64
 
   private val SchemaTag = "schema="
 
@@ -381,8 +300,15 @@ object OnlineTable {
                                            entries: Map[Int, String],
                                            schema: StructType)
 
+  /** The manifest `name`; a committed version that is not one (say, a
+    * parquet dir committed under a reused root by other code) fails at
+    * once with an [[IllegalStateException]] naming the root and the
+    * version, which no publish retries. */
   private def readManifest(fs: FileSystem, rootPath: Path,
                            name: String): Manifest = {
+    if (!name.startsWith(ManifestPrefix))
+      throw new IllegalStateException(
+        s"online table $rootPath: version $name is not a bucket manifest")
     val lines = readSmall(fs, new Path(rootPath, name)).split('\n')
     val n = lines.head.stripPrefix("nbuckets=").toInt
     val (schemaLine, bucketLines) =
@@ -433,13 +359,17 @@ object OnlineTable {
 
   /** The rows of the manifest's buckets that `keep` admits, read with the
     * recorded schema — no inference job — and empty, not failing, when
-    * `keep` admits none. */
+    * `keep` admits none. Paths go to each scan in groups no larger than
+    * the session's parallel-listing threshold, so listing them runs on
+    * the driver: a larger group would start a Spark job with one task
+    * per bucket dir just to list them. */
   private def readBuckets(spark: SparkSession, rootPath: Path, man: Manifest,
                           keep: Int => Boolean): DataFrame = {
     val paths = bucketPaths(rootPath, man, keep)
     if (paths.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[Row](), man.schema)
-    else spark.read.schema(man.schema).parquet(paths: _*)
+    else paths.grouped(spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
+      .map(spark.read.schema(man.schema).parquet(_: _*)).reduce(_ union _)
   }
 
   /** The hash bucket of each row of `df`. Integral key columns hash as
@@ -455,12 +385,17 @@ object OnlineTable {
 
   /** Write `df` hash-bucketed by `key` into `n` buckets as one fresh
     * immutable generation dir; returns bucket -> root-relative dir for
-    * every bucket that received rows (none: the dir is removed). */
+    * every bucket that received rows (none: the dir is removed). Rows
+    * are first exchanged by bucket across the session's task slots, so
+    * each bucket is one file and the buckets are written in parallel,
+    * not every input partition writing a file into every bucket. */
   private def writeGeneration(df: DataFrame, key: Seq[String], n: Int,
                               fs: FileSystem, rootPath: Path): Map[Int, String] = {
     val genRel = freshName(GenPrefix)
     val genPath = new Path(rootPath, genRel)
     df.withColumn(BucketCol, bucketExpr(df, key, n))
+      .repartition(math.min(n, df.sparkSession.sparkContext.defaultParallelism),
+        col(BucketCol))
       .write.partitionBy(BucketCol).parquet(genPath.toString)
     val written = fs.listStatus(genPath).toSeq
       .filter(st => st.isDirectory &&
@@ -471,6 +406,32 @@ object OnlineTable {
       }.toMap
     if (written.isEmpty) fs.delete(genPath, true)
     written
+  }
+
+  /** Write `df` as one fresh generation at `n` buckets plus a manifest
+    * over it (no entries if `df` is empty); returns the manifest name. */
+  private def writeSnapshot(df: DataFrame, key: Seq[String], n: Int,
+                            fs: FileSystem, rootPath: Path): String =
+    writeManifest(fs, rootPath, n, writeGeneration(df, key, n, fs, rootPath),
+      df.schema)
+
+  /** Publish `df` as the new live snapshot of the table at `root`,
+    * hash-bucketed by `key` at the live manifest's bucket count (64 on
+    * a first publish); an empty `df` publishes an empty table. Retains
+    * the newest `keepVersions` committed snapshots (>= 2: the new one
+    * plus at least the previous for in-flight readers); larger values
+    * give time-travel depth — [[readVersion]] can read any retained
+    * snapshot. Concurrent publishers are safe: a lost commit race
+    * rewrites `df` over the winner's bucket count, so every publisher
+    * lands in the log exactly once, in commit order. */
+  def publish(df: DataFrame, root: String, key: Seq[String],
+              keepVersions: Int = 2): Unit = {
+    val (fs, rootPath) = fsOf(df.sparkSession, root)
+    casLoop(fs, rootPath, keepVersions) { h0 =>
+      val n = h0.fold(DefaultBuckets) { case (_, v) =>
+        readManifest(fs, rootPath, v).nBuckets }
+      Some(writeSnapshot(df, key, n, fs, rootPath))
+    }
   }
 
   /** Incremental bucketed publish of one upsert batch.
@@ -485,34 +446,29 @@ object OnlineTable {
     * manifest file, collected by the next publish after the grace
     * window.
     *
-    * First publish (or a full `v-` head) bucketizes everything once;
-    * afterwards `nBuckets` is pinned by the live manifest and the
-    * parameter is ignored. The merged result for a touched bucket may
-    * be empty (a delete-style merge) — that bucket simply leaves the
-    * manifest; a table cannot become entirely empty this way. */
+    * A first publish bucketizes everything once; afterwards `nBuckets`
+    * is pinned by the live manifest and the parameter is ignored. The
+    * merged result for a touched bucket may be empty (a delete-style
+    * merge) — that bucket simply leaves the manifest. An empty batch,
+    * and a first batch that merges to nothing, commit nothing. */
   def publishBucketedBatch(batch: DataFrame, root: String,
                            key: Seq[String],
                            merge: (DataFrame, DataFrame) => DataFrame,
-                           nBuckets: Int = 64, keepVersions: Int = 2): Unit = {
+                           nBuckets: Int = DefaultBuckets,
+                           keepVersions: Int = 2): Unit = {
     require(nBuckets >= 1, "nBuckets must be >= 1")
     val spark = batch.sparkSession
     val (fs, rootPath) = fsOf(spark, root)
     casLoop(fs, rootPath, keepVersions) { h0 =>
-      val prevMan = h0.map(_._2).filter(isManifest)
-        .map(readManifest(fs, rootPath, _))
+      val prevMan = h0.map { case (_, v) => readManifest(fs, rootPath, v) }
       val n = prevMan.fold(nBuckets)(_.nBuckets)
-      // first publish, or migration of a full snapshot: every bucket is
-      // touched exactly once
+      // first publish: every bucket is touched exactly once
       val touched = prevMan.fold((0 until n).toSet)(_ =>
         batch.select(bucketExpr(batch, key, n).as(BucketCol))
           .distinct().collect().map(_.getInt(0)).toSet)
       if (touched.isEmpty) None // empty batch: nothing to change
       else {
-        val prev = prevMan match {
-          case Some(man) => readBuckets(spark, rootPath, man, touched)
-          case None =>
-            h0.fold(batch.limit(0)) { case (_, v) => snapshot(spark, fs, rootPath, v) }
-        }
+        val prev = prevMan.fold(batch.limit(0))(readBuckets(spark, rootPath, _, touched))
         val merged = merge(prev, batch)
         val written = writeGeneration(merged, key, n, fs, rootPath)
         require(written.keySet.subsetOf(touched),
@@ -520,15 +476,11 @@ object OnlineTable {
             "callback must not invent keys the batch does not carry")
         val entries = prevMan.fold(Map.empty[Int, String])(_.entries -- touched) ++
           written
-        if (entries.nonEmpty)
-          Some(writeManifest(fs, rootPath, n, entries, merged.schema))
-        // nothing merged out: on a FIRST publish this is just an empty
-        // micro-batch against a never-published table (a stream's first
-        // trigger is often empty) — a no-op, not an error; on a LIVE
-        // table it would tear the whole table down
-        else if (h0.isEmpty) None
-        else throw new IllegalArgumentException(
-          "bucketed publish would leave an empty table — use publish()")
+        // nothing merged out of a FIRST publish: an empty micro-batch
+        // against a never-published table (a stream's first trigger is
+        // often empty) — a no-op, not an error
+        if (entries.isEmpty && h0.isEmpty) None
+        else Some(writeManifest(fs, rootPath, n, entries, merged.schema))
       }
     }
   }
@@ -561,12 +513,11 @@ object OnlineTable {
     * live snapshot into ONE fresh generation (same bucket count) and
     * commits it through the log. Readers and concurrent upserts follow
     * the [[rebucket]] safety argument verbatim — this IS a rebucket at
-    * the live count (or `nBuckets` for a full head that was never
-    * bucketed), read afresh at every attempt. Run it on the maintenance
-    * cadence small-file pressure dictates, not per batch. */
+    * the live count, read afresh at every attempt. Run it on the
+    * maintenance cadence small-file pressure dictates, not per batch. */
   def compact(spark: SparkSession, root: String, key: Seq[String],
-              nBuckets: Int = 64, keepVersions: Int = 2): Unit =
-    rewriteBuckets(spark, root, key, keepVersions)(_.fold(nBuckets)(_.nBuckets))
+              keepVersions: Int = 2): Unit =
+    rewriteBuckets(spark, root, key, keepVersions)(_.nBuckets)
 
   /** CAS-committed re-bucketing migration: rewrite the live snapshot as
     * a fresh bucketed generation at `newBuckets` hash buckets, committed
@@ -579,7 +530,7 @@ object OnlineTable {
     * that wins the seq forces the rebucket to re-derive from the
     * winner's snapshot (and vice versa — the upsert loop re-derives over
     * the new bucket count it finds at ITS retry). No-op if the table was
-    * never published or is empty. */
+    * never published. */
   def rebucket(spark: SparkSession, root: String, key: Seq[String],
                newBuckets: Int, keepVersions: Int = 2): Unit = {
     require(newBuckets >= 1, "newBuckets must be >= 1")
@@ -587,18 +538,16 @@ object OnlineTable {
   }
 
   /** Rewrite the live snapshot as one generation at the bucket count
-    * `count` picks from the live manifest (None: a full `v-` head). */
+    * `count` picks from the live manifest. */
   private def rewriteBuckets(spark: SparkSession, root: String,
                              key: Seq[String], keepVersions: Int)(
-      count: Option[Manifest] => Int): Unit = {
+      count: Manifest => Int): Unit = {
     val (fs, rootPath) = fsOf(spark, root)
     casLoop(fs, rootPath, keepVersions) { h0 =>
-      h0.flatMap { case (_, v) =>
-        val n = count(Some(v).filter(isManifest).map(readManifest(fs, rootPath, _)))
-        val snap = snapshot(spark, fs, rootPath, v)
-        val written = writeGeneration(snap, key, n, fs, rootPath)
-        if (written.isEmpty) None // empty snapshot: nothing to rewrite
-        else Some(writeManifest(fs, rootPath, n, written, snap.schema))
+      h0.map { case (_, v) =>
+        val man = readManifest(fs, rootPath, v)
+        writeSnapshot(readBuckets(spark, rootPath, man, _ => true), key,
+          count(man), fs, rootPath)
       }
     }
   }
@@ -607,8 +556,7 @@ object OnlineTable {
     * serving-sized key set (small by construction — it broadcasts), a
     * bucketed table needs to scan ONLY the gen dirs of the buckets the
     * keys hash into — O(|keys|) files instead of the whole entity
-    * table, the read-side half of the bucketed-publish bargain. Falls
-    * back to a full-snapshot scan for non-bucketed versions. Returns
+    * table, the read-side half of the bucketed-publish bargain. Returns
     * None only if the table was never published.
     *
     * Building the frame reads the log head and the manifest, which
@@ -621,15 +569,10 @@ object OnlineTable {
              keys: DataFrame): Option[DataFrame] = {
     val (fs, rootPath) = fsOf(spark, root)
     head(fs, rootPath).map { case (_, v) =>
-      val snap =
-        if (!isManifest(v)) snapshot(spark, fs, rootPath, v)
-        else {
-          val man = readManifest(fs, rootPath, v)
-          val touched = keys.select(bucketExpr(keys, key, man.nBuckets))
-            .collect().map(_.getInt(0)).toSet
-          readBuckets(spark, rootPath, man, touched)
-        }
-      snap.join(broadcast(keys), key)
+      val man = readManifest(fs, rootPath, v)
+      val touched = keys.select(bucketExpr(keys, key, man.nBuckets))
+        .collect().map(_.getInt(0)).toSet
+      readBuckets(spark, rootPath, man, touched).join(broadcast(keys), key)
     }
   }
 
@@ -642,13 +585,11 @@ object OnlineTable {
       .filter(v => fs.exists(new Path(rootPath, v)))
   }
 
-  /** A retained version's rows — a full `v-` dir directly, a bucketed
-    * `m-` manifest via its referenced bucket-generation dirs. */
+  /** A retained version's rows, via its manifest's bucket-generation
+    * dirs. */
   private def snapshot(spark: SparkSession, fs: FileSystem, rootPath: Path,
                        version: String): DataFrame =
-    if (isManifest(version))
-      readBuckets(spark, rootPath, readManifest(fs, rootPath, version), _ => true)
-    else spark.read.parquet(new Path(rootPath, version).toString)
+    readBuckets(spark, rootPath, readManifest(fs, rootPath, version), _ => true)
 
   /** Time-travel read of a retained snapshot (see [[listVersions]]). */
   def readVersion(spark: SparkSession, root: String, version: String): DataFrame = {

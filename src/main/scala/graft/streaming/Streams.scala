@@ -432,8 +432,9 @@ object Streams {
     * DataFrame->DataFrame features/filtering before ingestion), collapse to
     * latest-per-key, merge with the live snapshot (max_by event time
     * again), and publish through [[graft.store.OnlineTable]] — immutable
-    * version dirs + an atomic commit-log pointer, safe for concurrent
-    * readers and object stores (no directory renames).
+    * bucket-generation dirs named by a manifest, committed through an
+    * atomic commit-log pointer, safe for concurrent readers and object
+    * stores (no directory renames).
     *
     * Publish is the BUCKETED incremental form
     * ([[graft.store.OnlineTable.publishBucketedBatch]]): the snapshot is
@@ -445,8 +446,9 @@ object Streams {
     * after a failure republish idempotently (latest-per-key of a union
     * is idempotent; a crashed publish leaves only unreferenced gen dirs
     * collected by GC), and a concurrent publisher costs a CAS re-derive,
-    * never a lost update. */
-  /** @param compactEvery run [[graft.store.OnlineTable.compact]] after
+    * never a lost update.
+    *
+    * @param compactEvery run [[graft.store.OnlineTable.compact]] after
     *   every Nth micro-batch (0 disables): each batch adds one
     *   generation dir for its touched buckets, so a long-running stream
     *   scatters every bucket's rows across many small files; periodic
@@ -458,7 +460,7 @@ object Streams {
   def upsertOnline(stream: DataFrame, key: Seq[String], ts: String,
                    tieBreak: String, path: String,
                    preprocess: DataFrame => DataFrame = identity,
-                   buckets: Int = 64, compactEvery: Long = 0L) = {
+                   compactEvery: Long = 0L) = {
     import graft.ops.PointInTime
     import graft.store.OnlineTable
     stream.writeStream.outputMode("update").foreachBatch {
@@ -467,12 +469,11 @@ object Streams {
           PointInTime.latestPerKey(preprocess(batch), key, ts, tieBreak)
         OnlineTable.publishBucketedBatch(latestBatch, path, key,
           (prev, b) => PointInTime.latestPerKey(
-            prev.unionByName(b), key, ts, tieBreak),
-          nBuckets = buckets)
+            prev.unionByName(b), key, ts, tieBreak))
         // after the publish, so a retried batch re-runs idempotently
         // (compact itself is a no-op on content)
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          OnlineTable.compact(batch.sparkSession, path, key, buckets)
+          OnlineTable.compact(batch.sparkSession, path, key)
     }
   }
 

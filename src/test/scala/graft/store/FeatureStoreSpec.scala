@@ -26,6 +26,23 @@ class FeatureStoreSpec extends AnyFunSuite {
     assert(out === Seq((1L, 30L, 0.9)))
   }
 
+  test("materializeOnline buckets by the entity key: bigint keys find every " +
+      "present row of an int entity column; a local key set runs no job") {
+    val dir = java.nio.file.Files.createTempDirectory("fs").toString
+    val intView = view.copy(name = "int_feats")
+    val src = (1 to 40).flatMap(u => Seq((u, 10L, u * 0.5), (u, 30L, u * 1.0)))
+      .toDF("uid", "ts", "score")
+    materializeOnline(intView, src, s"$dir/online")
+    val keys = ((1L to 40L by 3L) ++ Seq(41L, 1000L)).toDF("uid")
+    var lookup: org.apache.spark.sql.DataFrame = null
+    assert(TestSpark.jobsRun {
+      lookup = getOnlineFeatures(spark, s"$dir/online", intView, keys)
+    } === 0, "building the lookup on a local key set ran a job")
+    val out = lookup.select(col("uid").cast("long"), col("ts"), col("score"))
+      .as[(Long, Long, Double)].collect().toSet
+    assert(out === (1L to 40L by 3L).map(u => (u, 30L, u * 1.0)).toSet)
+  }
+
   test("view projection drops non-feature columns") {
     assert(view.project(source).columns.toSeq === Seq("uid", "ts", "score"))
   }

@@ -11,159 +11,121 @@ class OnlineTableSpec extends AnyFunSuite {
 
   private def versions(root: String): Set[String] =
     new java.io.File(root).listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("v-"))
+      .filter(f => f.isFile && f.getName.startsWith("m-"))
       .map(_.getName).toSet
+
+  private def genSubdirs(root: String): Set[String] =
+    Option(new java.io.File(root).listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("g-"))
+      .flatMap(g => g.listFiles().filter(_.isDirectory)
+        .map(b => s"${g.getName}/${b.getName}"))
+      .toSet
+
+  private def commitSeqs(root: String): Seq[Long] =
+    Option(new java.io.File(root, "_commits").listFiles())
+      .toSeq.flatten.map(_.getName).filter(_.startsWith("c-"))
+      .map(_.stripPrefix("c-").toLong).sorted
 
   test("publish/read roundtrip; pointer flips; old snapshots GC'd after one cycle") {
     val root = java.nio.file.Files.createTempDirectory("ot").toString + "/t"
     assert(OnlineTable.read(spark, root).isEmpty)
-    OnlineTable.publish(Seq((1L, "a")).toDF("k", "v"), root)
+    OnlineTable.publish(Seq((1L, "a")).toDF("k", "v"), root, Seq("k"))
     val v1 = OnlineTable.currentVersion(spark, root).get
+    assert(v1.startsWith("m-"))
     assert(OnlineTable.read(spark, root).get.as[(Long, String)].head() === ((1L, "a")))
 
-    OnlineTable.publish(Seq((1L, "b")).toDF("k", "v"), root)
+    OnlineTable.publish(Seq((1L, "b")).toDF("k", "v"), root, Seq("k"))
     val v2 = OnlineTable.currentVersion(spark, root).get
     assert(v2 !== v1)
     assert(OnlineTable.read(spark, root).get.as[(Long, String)].head() === ((1L, "b")))
     // previous retained for in-flight readers
     assert(versions(root) === Set(v1, v2))
+    assert(genSubdirs(root).size === 2)
 
-    OnlineTable.publish(Seq((1L, "c")).toDF("k", "v"), root)
+    OnlineTable.publish(Seq((1L, "c")).toDF("k", "v"), root, Seq("k"))
     val v3 = OnlineTable.currentVersion(spark, root).get
-    // v1 collected, v2 retained
+    // v1 and its bucket dir collected, v2 retained
     assert(versions(root) === Set(v2, v3))
+    assert(genSubdirs(root).size === 2)
+    // an empty frame publishes an empty table, not an unpublished one
+    OnlineTable.publish(Seq.empty[(Long, String)].toDF("k", "v"), root, Seq("k"))
+    assert(OnlineTable.read(spark, root).get.count() === 0L)
+    assert(OnlineTable.lookup(spark, root, Seq("k"), Seq(1L).toDF("k")).get
+      .count() === 0L)
   }
 
   test("a crashed publish (orphan version dir, log untouched) is invisible and collected") {
     val root = java.nio.file.Files.createTempDirectory("ot2").toString + "/t"
-    OnlineTable.publish(Seq((1L, "live")).toDF("k", "v"), root)
+    OnlineTable.publish(Seq((1L, "live")).toDF("k", "v"), root, Seq("k"))
     val live = OnlineTable.currentVersion(spark, root).get
-    // simulate a writer that died after writing data but before the commit
+    // simulate a writer that died after writing its generation and its
+    // manifest but before the commit
+    val orphanGen = "g-9999999999999-deadbeef"
+    val orphanMan = "m-9999999999999-deadbeef"
     Seq((1L, "orphan")).toDF("k", "v")
-      .write.parquet(s"$root/v-9999999999999-deadbeef")
+      .write.parquet(s"$root/$orphanGen/__graft_bucket=0")
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, orphanMan),
+      s"nbuckets=64\n0\t$orphanGen/__graft_bucket=0".getBytes("UTF-8"))
     assert(OnlineTable.read(spark, root).get
       .select("v").as[String].head() === "live", "orphan must be invisible")
     // fresh (within the in-flight grace window): a concurrent publisher
     // mid-commit looks exactly like this, so GC must NOT touch it yet
-    OnlineTable.publish(Seq((1L, "next")).toDF("k", "v"), root)
-    assert(versions(root).contains("v-9999999999999-deadbeef"),
-      "an in-grace uncommitted dir must survive GC (it may be mid-commit)")
-    // age it past the grace window -> the writer is provably dead
-    age(s"$root/v-9999999999999-deadbeef")
-    OnlineTable.publish(Seq((1L, "after")).toDF("k", "v"), root)
-    assert(!versions(root).contains("v-9999999999999-deadbeef"),
-      "aged orphan must be garbage-collected by the next publish")
+    OnlineTable.publish(Seq((1L, "next")).toDF("k", "v"), root, Seq("k"))
+    assert(versions(root).contains(orphanMan) &&
+      genSubdirs(root).contains(s"$orphanGen/__graft_bucket=0"),
+      "an in-grace uncommitted manifest and gen must survive GC (they may be mid-commit)")
+    // age them past the grace window -> the writer is provably dead
+    Seq(orphanMan, orphanGen, s"$orphanGen/__graft_bucket=0")
+      .foreach(f => age(s"$root/$f"))
+    OnlineTable.publish(Seq((1L, "after")).toDF("k", "v"), root, Seq("k"))
+    assert(!versions(root).contains(orphanMan),
+      "aged orphan manifest must be garbage-collected by the next publish")
+    assert(!new java.io.File(root, orphanGen).exists(),
+      "aged orphan gen must be garbage-collected by the next publish")
     assert(!versions(root).contains(live), "superseded snapshots still GC")
+    assert(OnlineTable.read(spark, root).get
+      .select("v").as[String].head() === "after")
   }
 
-  private def age(dir: String): Unit = {
-    val f = new java.io.File(dir)
+  private def age(path: String): Unit = {
+    val f = new java.io.File(path)
     val old = System.currentTimeMillis() - OnlineTable.OrphanGraceMs - 60000
     assert(f.setLastModified(old))
   }
 
-  test("publishIf: stale expectation loses cleanly; nothing torn") {
-    val root = java.nio.file.Files.createTempDirectory("ot6").toString + "/t"
-    // CAS from empty: expected None wins
-    OnlineTable.publishIf(Seq((1L, "base")).toDF("k", "v"), root, None)
-    val v1 = OnlineTable.currentVersion(spark, root).get
-    // two read-modify-write publishers both read v1; A commits first
-    OnlineTable.publishIf(Seq((1L, "A")).toDF("k", "v"), root, Some(v1))
-    val vA = OnlineTable.currentVersion(spark, root).get
-    // B's expectation is now stale: it must LOSE, loudly, changing nothing
-    val e = intercept[OnlineTable.ConcurrentPublishException](
-      OnlineTable.publishIf(Seq((1L, "B")).toDF("k", "v"), root, Some(v1)))
-    assert(e.expected === Some(v1) && e.actual === Some(vA))
-    assert(OnlineTable.read(spark, root).get
-      .select("v").as[String].head() === "A", "loser must not alter the table")
-    assert(OnlineTable.currentVersion(spark, root) === Some(vA))
-    // a second None-expectation publish on a non-empty table also loses
-    intercept[OnlineTable.ConcurrentPublishException](
-      OnlineTable.publishIf(Seq((1L, "C")).toDF("k", "v"), root, None))
-    // retry with the fresh head succeeds
-    OnlineTable.publishIf(Seq((1L, "B2")).toDF("k", "v"), root, Some(vA))
-    assert(OnlineTable.read(spark, root).get
-      .select("v").as[String].head() === "B2")
-  }
-
   test("interleaved publishers: exclusive create admits exactly one per seq") {
     val root = java.nio.file.Files.createTempDirectory("ot7").toString + "/t"
-    OnlineTable.publish(Seq((1L, "v0")).toDF("k", "v"), root)
-    // force the low-level race: both writers observed head seq, both
-    // target seq+1 — the filesystem admits ONE c-file; the loser's
-    // publishIf surfaces the conflict even though its data is written
-    val v0 = OnlineTable.currentVersion(spark, root).get
-    val t = new java.util.concurrent.atomic.AtomicInteger(0)
+    OnlineTable.publish(Seq((1L, "v0")).toDF("k", "v"), root, Seq("k"))
+    // two publishers race for seq 2: the filesystem admits ONE commit
+    // file, and the loser retries against the new head, so both land
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (0 until 2).map { i =>
-      new Thread(() => {
-        try {
-          OnlineTable.publishIf(Seq((1L, s"w$i")).toDF("k", "v"),
-            root, Some(v0))
-          t.incrementAndGet()
-        } catch {
-          case _: OnlineTable.ConcurrentPublishException => ()
-          case other: Throwable => errs.add(other)
-        }
-      })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join(120000))
-    assert(errs.isEmpty, s"unexpected failures: $errs")
-    assert(t.get() === 1, "exactly one CAS publisher must win")
-    val live = OnlineTable.read(spark, root).get.select("v").as[String].head()
-    assert(live === "w0" || live === "w1")
-    // no torn snapshot: every retained version reads completely
-    OnlineTable.listVersions(spark, root).foreach { v =>
-      assert(OnlineTable.readVersion(spark, root, v).count() === 1L)
-    }
-    // retrying unconditional publishers both land (in some order)
-    val threads2 = (0 until 2).map { i =>
       new Thread(() =>
         try OnlineTable.publish(Seq((1L, s"r$i")).toDF("k", "v"), root,
-          keepVersions = 5)
+          Seq("k"), keepVersions = 5)
         catch { case e: Throwable => errs.add(e) })
     }
-    threads2.foreach(_.start()); threads2.foreach(_.join(120000))
+    threads.foreach(_.start()); threads.foreach(_.join(120000))
     assert(errs.isEmpty, s"retrying publish must absorb collisions: $errs")
+    assert(commitSeqs(root) === Seq(1L, 2L, 3L),
+      "each publisher must take exactly one seq")
+    // no torn snapshot: every retained version reads completely
     val vs = OnlineTable.listVersions(spark, root)
+    vs.foreach { v =>
+      assert(OnlineTable.readVersion(spark, root, v).count() === 1L)
+    }
     val tail = vs.takeRight(2).map(v =>
       OnlineTable.readVersion(spark, root, v).select("v").as[String].head())
     assert(tail.toSet === Set("r0", "r1"),
       s"both retrying publishers must be in the log, got $tail")
   }
 
-  test("publishMerge: no publisher's contribution is lost under contention") {
-    val root = java.nio.file.Files.createTempDirectory("ot9").toString + "/t"
-    OnlineTable.publish(Seq((0L, 0L)).toDF("k", "n"), root, keepVersions = 3)
-    // two read-modify-write publishers each add their own row; the loser
-    // re-derives from the winner's snapshot, so BOTH rows must land
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = (1 to 2).map { i =>
-      new Thread(() =>
-        try OnlineTable.publishMerge(spark, root, snap =>
-          snap.get.unionByName(Seq((i.toLong, i.toLong)).toDF("k", "n")),
-          keepVersions = 3)
-        catch { case e: Throwable => errs.add(e) })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join(120000))
-    assert(errs.isEmpty, s"publishMerge must absorb the race: $errs")
-    val live = OnlineTable.read(spark, root).get
-      .as[(Long, Long)].collect().toSet
-    assert(live === Set((0L, 0L), (1L, 1L), (2L, 2L)),
-      s"a lost update dropped a contribution: $live")
-    // single-writer derive-from-empty works too
-    val root2 = java.nio.file.Files.createTempDirectory("ot9b").toString + "/t"
-    OnlineTable.publishMerge(spark, root2, snap => {
-      assert(snap.isEmpty); Seq((9L, 9L)).toDF("k", "n")
-    })
-    assert(OnlineTable.read(spark, root2).get.count() === 1L)
-  }
-
   test("time travel: deeper retention keeps history readable by version") {
     val root = java.nio.file.Files.createTempDirectory("ot4").toString + "/t"
-    OnlineTable.publish(Seq((1L, "gen1")).toDF("k", "v"), root, keepVersions = 3)
-    OnlineTable.publish(Seq((1L, "gen2")).toDF("k", "v"), root, keepVersions = 3)
-    OnlineTable.publish(Seq((1L, "gen3")).toDF("k", "v"), root, keepVersions = 3)
+    def pub(v: String): Unit =
+      OnlineTable.publish(Seq((1L, v)).toDF("k", "v"), root, Seq("k"),
+        keepVersions = 3)
+    pub("gen1"); pub("gen2"); pub("gen3")
     val vs = OnlineTable.listVersions(spark, root)
     assert(vs.size === 3)
     assert(OnlineTable.readVersion(spark, root, vs.head)
@@ -171,11 +133,41 @@ class OnlineTableSpec extends AnyFunSuite {
     assert(OnlineTable.readVersion(spark, root, vs.last)
       .select("v").as[String].head() === "gen3")
     // a fourth publish evicts gen1
-    OnlineTable.publish(Seq((1L, "gen4")).toDF("k", "v"), root, keepVersions = 3)
+    pub("gen4")
     val vs2 = OnlineTable.listVersions(spark, root)
     assert(vs2.size === 3 && !vs2.contains(vs.head))
+    assert(versions(root) === vs2.toSet)
     assert(OnlineTable.read(spark, root).get
       .select("v").as[String].head() === "gen4")
+  }
+
+  test("a committed version that is not a manifest fails at once, naming " +
+      "root and version") {
+    val root = java.nio.file.Files.createTempDirectory("ot5").toString + "/t"
+    // a parquet snapshot dir committed by hand, as other code writing
+    // under a reused root would leave it
+    val stale = "v-0000000000001-deadbeef"
+    Seq((1L, 1L, "x")).toDF("k", "ts", "v").write.parquet(s"$root/$stale")
+    new java.io.File(root, "_commits").mkdirs()
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(root, "_commits", "c-000000000001"),
+      stale.getBytes("UTF-8"))
+    val m = latestMerge(Seq("k"), "ts", "ts")
+    // no publish retries this error: each call raises it on its first
+    // read of the head, commits nothing and writes no generation
+    def fails(what: String)(f: => Any): Unit = {
+      val e = intercept[IllegalStateException](f)
+      assert(e.getMessage.contains(root) && e.getMessage.contains(stale),
+        s"$what: ${e.getMessage}")
+    }
+    fails("read")(OnlineTable.read(spark, root))
+    fails("lookup")(OnlineTable.lookup(spark, root, Seq("k"), Seq(1L).toDF("k")))
+    fails("publishBucketedBatch")(OnlineTable.publishBucketedBatch(
+      Seq((1L, 2L, "y")).toDF("k", "ts", "v"), root, Seq("k"), m))
+    fails("publish")(OnlineTable.publish(
+      Seq((1L, 2L, "y")).toDF("k", "ts", "v"), root, Seq("k")))
+    assert(commitSeqs(root) === Seq(1L))
+    assert(genSubdirs(root).isEmpty && versions(root).isEmpty)
   }
 
   // ---- bucketed incremental publish ---------------------------------
@@ -185,13 +177,6 @@ class OnlineTableSpec extends AnyFunSuite {
         => org.apache.spark.sql.DataFrame =
     (prev, b) => graft.ops.PointInTime.latestPerKey(
       prev.unionByName(b), key, ts, tie)
-
-  private def genSubdirs(root: String): Set[String] =
-    Option(new java.io.File(root).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("g-"))
-      .flatMap(g => g.listFiles().filter(_.isDirectory)
-        .map(b => s"${g.getName}/${b.getName}"))
-      .toSet
 
   test("bucketed publish rewrites O(touched buckets), not the table") {
     val root = java.nio.file.Files.createTempDirectory("otb1").toString + "/t"
@@ -266,27 +251,40 @@ class OnlineTableSpec extends AnyFunSuite {
       s"a lost update dropped a contribution: $live")
   }
 
-  test("bucketed publish migrates a full snapshot and interleaves with publish()") {
+  test("full publish interleaves with upserts") {
     val root = java.nio.file.Files.createTempDirectory("otb4").toString + "/t"
     val m = latestMerge(Seq("k"), "ts", "ts")
-    // starts life as a FULL versioned table
+    def nBuckets: Int = {
+      val v = OnlineTable.currentVersion(spark, root).get
+      val src = scala.io.Source.fromFile(s"$root/$v")
+      try src.getLines().next().stripPrefix("nbuckets=").toInt
+      finally src.close()
+    }
+    // a whole-table publish pins the bucket count: an upsert asking for
+    // 4 buckets keeps the published 64 and rewrites one of them
     OnlineTable.publish(
-      Seq((1L, 1L, "full1"), (2L, 1L, "full2")).toDF("k", "ts", "v"), root)
-    // first bucketed batch migrates everything into buckets
+      (1L to 200L).map(k => (k, 1L, s"full$k")).toDF("k", "ts", "v"),
+      root, Seq("k"))
+    assert(nBuckets === 64)
+    val published = genSubdirs(root)
     OnlineTable.publishBucketedBatch(
       Seq((2L, 2L, "upd")).toDF("k", "ts", "v"), root, Seq("k"), m,
       nBuckets = 4)
-    assert(OnlineTable.currentVersion(spark, root).get.startsWith("m-"))
+    assert(nBuckets === 64)
+    assert((genSubdirs(root) -- published).size === 1,
+      "a one-key upsert must write exactly one bucket")
     val live = OnlineTable.read(spark, root).get
-      .select("k", "v").as[(Long, String)].collect().toSet
-    assert(live === Set((1L, "full1"), (2L, "upd")))
-    // a later FULL publish supersedes the manifest cleanly
-    OnlineTable.publish(Seq((9L, 9L, "flat")).toDF("k", "ts", "v"), root)
-    assert(OnlineTable.read(spark, root).get.count() === 1L)
-    // and its GC (next cycle) collects the manifest's bucket gens
-    OnlineTable.publish(Seq((9L, 10L, "flat2")).toDF("k", "ts", "v"), root)
-    assert(genSubdirs(root).isEmpty,
-      "bucket gens must be collected once no retained manifest remains")
+      .select("k", "v").as[(Long, String)].collect().toMap
+    assert(live.size === 200 && live(2L) === "upd" && live(1L) === "full1")
+    // a later whole-table publish supersedes both
+    OnlineTable.publish(Seq((9L, 9L, "flat")).toDF("k", "ts", "v"), root, Seq("k"))
+    assert(OnlineTable.read(spark, root).get
+      .select("k", "v").as[(Long, String)].collect().toSeq === Seq((9L, "flat")))
+    // and its GC (next cycle) collects the published and upserted gens
+    OnlineTable.publish(Seq((9L, 10L, "flat2")).toDF("k", "ts", "v"), root, Seq("k"))
+    val left = genSubdirs(root)
+    assert(left.size === 2 && (left intersect published).isEmpty,
+      s"superseded gens must be collected once no retained manifest references them: $left")
   }
 
   test("bucket-pruned lookup scans only the keys' buckets, same answer") {
@@ -325,9 +323,9 @@ class OnlineTableSpec extends AnyFunSuite {
       assert(hits === want, s"${ks.schema("k").dataType} keys missed " +
         s"${want -- hits}")
     }
-    // non-bucketed snapshot: same API, full-scan fallback
+    // a whole-table publish serves lookups the same way
     val root2 = java.nio.file.Files.createTempDirectory("otb6").toString + "/t"
-    OnlineTable.publish(Seq((1L, 1L, "x")).toDF("k", "ts", "v"), root2)
+    OnlineTable.publish(Seq((1L, 1L, "x")).toDF("k", "ts", "v"), root2, Seq("k"))
     assert(OnlineTable.lookup(spark, root2, Seq("k"), Seq(1L).toDF("k"))
       .get.count() === 1L)
     assert(OnlineTable.lookup(spark, root2 + "_never", Seq("k"),
@@ -419,6 +417,16 @@ class OnlineTableSpec extends AnyFunSuite {
     val v = OnlineTable.currentVersion(spark, root)
     OnlineTable.publishBucketedBatch(empty, root, Seq("k"), m)
     assert(OnlineTable.currentVersion(spark, root) === v)
+    // a delete-style merge that empties every bucket commits an empty
+    // table, which later upserts fill again
+    OnlineTable.publishBucketedBatch(Seq((1L, 2L, "gone")).toDF("k", "ts", "v"),
+      root, Seq("k"), (_, b) => b.filter(lit(false)))
+    assert(OnlineTable.currentVersion(spark, root) !== v)
+    assert(OnlineTable.read(spark, root).get.count() === 0L)
+    OnlineTable.publishBucketedBatch(
+      Seq((2L, 1L, "b")).toDF("k", "ts", "v"), root, Seq("k"), m)
+    assert(OnlineTable.read(spark, root).get.select("v").as[String]
+      .collect().toSeq === Seq("b"))
   }
 
   test("rebucket migrates bucket count under concurrent upserts, no lost update") {

@@ -156,7 +156,7 @@ class StreamsSpec extends AnyFunSuite {
         .map(_.split('/').head).toSet
     val mem = MemoryStream[(Long, Long, String)]
     val q = Streams.upsertOnline(mem.toDF().toDF("uid", "ts", "v"),
-      Seq("uid"), "ts", "v", path, buckets = 8, compactEvery = 2).start()
+      Seq("uid"), "ts", "v", path, compactEvery = 2).start()
     // batch 0: seed spread over the buckets; batches 1, 2: point upserts
     mem.addData((1L to 40L).map(k => (k, 1L, s"v$k")): _*)
     q.processAllAvailable()
