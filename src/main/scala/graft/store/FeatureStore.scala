@@ -44,11 +44,11 @@ object FeatureStore {
 
   /** Online point lookup: entity keys -> latest feature row. The requested
     * key set is small by construction (a serving batch), so it broadcasts —
-    * the online table is never shuffled, and only the bucket dirs the
-    * keys hash into are scanned at all ([[OnlineTable.lookup]]). A local
-    * key set is routed to its buckets on the driver, and the manifest
-    * carries the snapshot's schema, so building the lookup runs no Spark
-    * job. */
+    * the online table is never shuffled. A local key set is routed to its
+    * buckets on the driver, so only the bucket dirs its keys hash into are
+    * scanned at all ([[OnlineTable.lookup]]); any other key set joins
+    * against every bucket. The manifest carries the snapshot's schema, so
+    * building the lookup runs no Spark job. */
   def getOnlineFeatures(spark: SparkSession, path: String,
                         view: FeatureView, keys: DataFrame): DataFrame =
     OnlineTable.lookup(spark, path, view.entities, keys)

@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, xxhash64}
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType,
   LongType, MapType, ShortType, StructType}
@@ -28,7 +29,7 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType,
   * equivalent is a conditional PUT, e.g. S3 If-None-Match). Two
   * concurrent publishers that both read head N both target `c-<N+1>`;
   * the filesystem admits exactly ONE — the loser observes the collision
-  * and re-derives against the new head, so every publisher lands in the
+  * and retries against the new head, so every publisher lands in the
   * log exactly once. This is the multi-writer optimistic-concurrency core
   * of the transactional table formats (Delta's `_delta_log/<n>.json`
   * exclusive create is the same protocol).
@@ -362,13 +363,15 @@ object OnlineTable {
     * `keep` admits none. Paths go to each scan in groups no larger than
     * the session's parallel-listing threshold, so listing them runs on
     * the driver: a larger group would start a Spark job with one task
-    * per bucket dir just to list them. */
+    * per bucket dir just to list them (one scan of all 64 buckets ran
+    * q209 16-18 % slower end to end, 4 cores, sf0.01 and sf0.1). */
   private def readBuckets(spark: SparkSession, rootPath: Path, man: Manifest,
                           keep: Int => Boolean): DataFrame = {
     val paths = bucketPaths(rootPath, man, keep)
     if (paths.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[Row](), man.schema)
-    else paths.grouped(spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
+    else paths.grouped(math.max(1,
+        spark.sessionState.conf.parallelPartitionDiscoveryThreshold))
       .map(spark.read.schema(man.schema).parquet(_: _*)).reduce(_ union _)
   }
 
@@ -388,7 +391,9 @@ object OnlineTable {
     * every bucket that received rows (none: the dir is removed). Rows
     * are first exchanged by bucket across the session's task slots, so
     * each bucket is one file and the buckets are written in parallel,
-    * not every input partition writing a file into every bucket. */
+    * not every input partition writing a file into every bucket (without
+    * the exchange q209 ran 9-16 % and q28 5-24 % slower end to end, 4
+    * cores, sf0.01 and sf0.1; a streamed upsert measured no change). */
   private def writeGeneration(df: DataFrame, key: Seq[String], n: Int,
                               fs: FileSystem, rootPath: Path): Map[Int, String] = {
     val genRel = freshName(GenPrefix)
@@ -422,15 +427,21 @@ object OnlineTable {
     * plus at least the previous for in-flight readers); larger values
     * give time-travel depth — [[readVersion]] can read any retained
     * snapshot. Concurrent publishers are safe: a lost commit race
-    * rewrites `df` over the winner's bucket count, so every publisher
-    * lands in the log exactly once, in commit order. */
+    * retries the commit of the snapshot already written, and rewrites
+    * `df` only when the winner changed the bucket count (a rebucket), so
+    * every publisher lands in the log exactly once, in commit order. */
   def publish(df: DataFrame, root: String, key: Seq[String],
               keepVersions: Int = 2): Unit = {
     val (fs, rootPath) = fsOf(df.sparkSession, root)
+    // (bucket count, manifest) of the snapshot written so far: uncommitted,
+    // it outlives a lost race by the GC's grace window
+    var written: Option[(Int, String)] = None
     casLoop(fs, rootPath, keepVersions) { h0 =>
       val n = h0.fold(DefaultBuckets) { case (_, v) =>
         readManifest(fs, rootPath, v).nBuckets }
-      Some(writeSnapshot(df, key, n, fs, rootPath))
+      if (!written.exists(_._1 == n))
+        written = Some(n -> writeSnapshot(df, key, n, fs, rootPath))
+      written.map(_._2)
     }
   }
 
@@ -562,16 +573,21 @@ object OnlineTable {
     * Building the frame reads the log head and the manifest, which
     * carries the snapshot's schema, so the scan needs no inference job.
     * The keys' buckets come from the writer's own [[bucketExpr]],
-    * collected to the driver: a local key set (a `LocalRelation`, as a
-    * serving request builds it) folds that projection at optimization,
-    * so routing runs no Spark job; any other key set runs one. */
+    * collected to the driver when the keys are a local key set (a
+    * `LocalRelation`, as a serving request builds it): that projection
+    * folds at optimization, so routing runs no Spark job. Any other key
+    * set is joined against every bucket instead — routing it would run
+    * its plan once for the buckets and again for the join. */
   def lookup(spark: SparkSession, root: String, key: Seq[String],
              keys: DataFrame): Option[DataFrame] = {
     val (fs, rootPath) = fsOf(spark, root)
     head(fs, rootPath).map { case (_, v) =>
       val man = readManifest(fs, rootPath, v)
-      val touched = keys.select(bucketExpr(keys, key, man.nBuckets))
-        .collect().map(_.getInt(0)).toSet
+      val route = keys.select(bucketExpr(keys, key, man.nBuckets))
+      val touched: Int => Boolean =
+        if (route.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+          route.collect().map(_.getInt(0)).toSet
+        else _ => true
       readBuckets(spark, rootPath, man, touched).join(broadcast(keys), key)
     }
   }

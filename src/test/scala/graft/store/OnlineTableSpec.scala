@@ -118,6 +118,11 @@ class OnlineTableSpec extends AnyFunSuite {
       OnlineTable.readVersion(spark, root, v).select("v").as[String].head())
     assert(tail.toSet === Set("r0", "r1"),
       s"both retrying publishers must be in the log, got $tail")
+    // a lost race retries the commit of the snapshot it already wrote:
+    // one manifest and one generation per publish, no rewritten orphan
+    assert(versions(root).size === 3, s"manifests: ${versions(root)}")
+    assert(genSubdirs(root).map(_.takeWhile(_ != '/')).size === 3,
+      s"generations: ${genSubdirs(root)}")
   }
 
   test("time travel: deeper retention keeps history readable by version") {
@@ -357,6 +362,9 @@ class OnlineTableSpec extends AnyFunSuite {
       local.write.parquet(dir)
       val fromFile = spark.read.parquet(dir)
       assert(!fromFile.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      // not routed: joined against every bucket, its plan run once
+      assert(TestSpark.jobsRun(OnlineTable.lookup(spark, root, Seq("k"), fromFile)) === 0,
+        s"building a lookup on parquet $t keys ran a job")
       assert(rows(local) === want, s"$t local keys")
       assert(rows(fromFile) === want, s"$t parquet keys")
     }
