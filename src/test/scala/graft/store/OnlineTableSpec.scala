@@ -407,6 +407,24 @@ class OnlineTableSpec extends AnyFunSuite {
     check("compact")
   }
 
+  test("a whole-table read lists its buckets in groups, at any listing threshold") {
+    val root = java.nio.file.Files.createTempDirectory("otb14").toString + "/t"
+    OnlineTable.publish((1L to 300L).map(kk => (kk, s"v$kk")).toDF("k", "v"),
+      root, Seq("k"))
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val prev = spark.conf.getOption(key)
+    // more buckets than the threshold: each scan lists on the driver
+    try {
+      spark.conf.set(key, "32")
+      assert(TestSpark.jobsRun(OnlineTable.read(spark, root).get) === 0,
+        "building the read ran a job")
+      assert(OnlineTable.read(spark, root).get.count() === 300L)
+      // a threshold of 0 (which Spark accepts) lists in parallel, and reads
+      spark.conf.set(key, "0")
+      assert(OnlineTable.read(spark, root).get.count() === 300L)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("an empty FIRST micro-batch is a no-op, not a crash") {
     val root = java.nio.file.Files.createTempDirectory("otb8").toString + "/t"
     val m = latestMerge(Seq("k"), "ts", "ts")
